@@ -253,7 +253,6 @@ def run_scaling_point(
 
 def run_cdc_replay(
     cores: int, data_dir: str, n_buckets: int = 64, write_mode: str = "cow",
-    parse_mode: str = "pandas",
 ) -> dict:
     """Snapshot load + one availableNow streaming replay over pre-written
     parquet event segments. Returns wall seconds of the apply phase."""
@@ -263,13 +262,12 @@ def run_cdc_replay(
 
     spark = _spark(cores)
     try:
-        work = tempfile.mkdtemp(prefix=f"cdc_bench_{cores}_{write_mode}_{parse_mode}_")
+        work = tempfile.mkdtemp(prefix=f"cdc_bench_{cores}_{write_mode}_")
         cfg = SyncConfig(
             dst_path=os.path.join(work, "lake"),
             checkpoint_path=os.path.join(work, "cplog"),
             n_buckets=n_buckets,
             write_mode=write_mode,
-            parse_mode=parse_mode,
         )
         pipe = CdcPipeline(spark, cfg)
         snap = spark.read.parquet(os.path.join(data_dir, "snapshot"))
@@ -422,11 +420,6 @@ def main():
     _log("stream replay (mor)")
     hi_mor = run_cdc_replay(CPUS, data_dir, write_mode="mor")
     _settle()
-    # the same stream with the pure-JVM from_json parse (valid for plain
-    # JSON envelopes; the Arrow pandas-UDF path above stays the headline —
-    # it is the BSON-capable spec path). Measured +25-30%.
-    _log("stream replay (cow, jvm parse)")
-    hi_jvm = run_cdc_replay(CPUS, data_dir, parse_mode="jvm")
     spark = _spark(CPUS)
     _log("headline queries")
     queries, query_attempts = run_headline_queries(spark)
@@ -452,8 +445,6 @@ def main():
             "snapshot_sec": hi["snapshot_sec"],
             "events_per_sec_mor": hi_mor["events_per_sec"],
             "mor_final_rows": hi_mor["final_rows"],
-            "events_per_sec_jvm_parse": hi_jvm["events_per_sec"],
-            "jvm_parse_final_rows": hi_jvm["final_rows"],
         },
         scaling={
             "mode": "local-cluster (separate executor JVMs)",

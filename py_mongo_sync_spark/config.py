@@ -49,7 +49,6 @@ class SyncConfig:
     include_fields: frozenset[str] = frozenset()
     n_buckets: int = 16
     files_per_bucket: int = 1
-    salt_buckets: int = 8
     #: 'cow' rewrites changed buckets per MERGE (read-optimized);
     #: 'mor' appends per-bucket net-event delta files and resolves at read
     #: time (write ∝ batch size — the 100 TB streaming default), compacting
@@ -60,17 +59,14 @@ class SyncConfig:
     #: key's events into this many time-contiguous slices before the per-key
     #: fold (operators/dedup.py::fold_net_events_salted). 0 = single-phase.
     fold_salt: int = 0
-    #: 'pandas' = Arrow-vectorized UDF (handles BSON extended JSON);
-    #: 'jvm' = from_json fast path (plain JSON only, whole-stage codegen)
-    parse_mode: str = "pandas"
     #: retain this many table versions for time travel; older data files are
     #: physically removed every ``expire_every`` batches (0 = never expire).
     keep_versions: int = 8
     expire_every: int = 32
-    #: when a batch has ≥ n_buckets × this many data events (and no schema
-    #: candidates to probe), skip the key-probe doc scan: essentially every
-    #: bucket changes anyway, so assume all-changed instead of paying a full
-    #: JSON pre-parse of the batch. Pruning still engages for small batches.
+    #: when a batch has ≥ n_buckets × this many data events (and no column
+    #: the table lacks), the MERGE skips its changed-bucket probe of the
+    #: parsed fold: essentially every bucket changes anyway, so it rewrites
+    #: them all. Pruning still engages for small batches.
     probe_skip_factor: int = 200
     #: fail a batch that carries Mongo update operators the lake MERGE cannot
     #: express ($push/$rename/...); default = apply the expressible parts and

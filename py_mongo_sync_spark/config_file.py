@@ -17,7 +17,6 @@ lake destinations:
     [engine]
     n_buckets = 64
     write_mode = "mor"                 # or "cow"
-    parse_mode = "pandas"              # or "jvm"
 
     [sync]
     start_optime = 12345               # reference: sync.start_optime

@@ -1,13 +1,12 @@
-"""Vectorized BSON-ish JSON parse — the event-payload decode step.
+"""Vectorized BSON-ish JSON parse — the event-payload decode step, and the
+only code in the engine that decodes a change-event doc.
 
 Reference analogue: per-event dict handling throughout
-(/root/reference/mongosync/multi_oplog_replayer.py:99-121) and the
-``$set`` translation (/root/reference/mongosync/es/syncer.py:182-216).
-Per BASELINE.json input_hint, this runs as an Arrow-vectorized pandas UDF —
-batches cross the JVM↔Python boundary as Arrow record batches, no
-row-at-a-time serde. For pure-JSON payloads with no BSON-ish extensions a
-``from_json`` fast path (fully JVM, whole-stage codegen) is also provided;
-the pandas UDF is the default because it normalizes:
+(mongosync/multi_oplog_replayer.py:99-121) and the ``$set`` translation
+(mongosync/es/syncer.py:182-216). Runs as an Arrow UDF: batches cross the
+JVM↔Python boundary as Arrow record batches and the payload struct is built
+straight from Python lists — no row-at-a-time serde, no pandas frame. It
+normalizes:
 
 - ``$set`` patches: ``{conv_id, turn_idx, "$set": {...}}`` →
   flat columns + ``is_patch=True`` (UpdateOne semantics:
@@ -15,29 +14,76 @@ the pandas UDF is the default because it normalizes:
 - BSON extended-JSON scalars: ``{"$numberLong": "7"}``,
   ``{"$numberInt": "7"}``, ``{"$date": <ms>}``;
 - missing/extra fields (schemaless source → fixed lake schema).
+
+Stdlib ``json`` is the authority on what a doc means (bare ``NaN`` and
+``Infinity`` included). A doc that is not a JSON object reads as an empty
+row, so its event drops like an undecodable one; a field whose JSON type
+its column cannot hold reads as NULL in that column only.
 """
 
 from __future__ import annotations
 
 import json
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+import pyarrow as pa
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
 from py_mongo_sync_spark.schema import payload_parse_schema
 
 _BSON_SCALARS = ("$numberLong", "$numberInt", "$numberDouble")
+_META = ("is_patch", "unset_cols", "inc_map")
 
 
 def _unwrap(v):
+    """Extended-JSON scalar → its value; a malformed wrapper stays a dict
+    (which no column can hold, so it reads as NULL)."""
     if isinstance(v, dict):
-        for k in _BSON_SCALARS:
-            if k in v:
-                num = v[k]
-                return float(num) if k == "$numberDouble" else int(num)
-        if "$date" in v:
-            return int(v["$date"])
+        try:
+            for k in _BSON_SCALARS:
+                if k in v:
+                    num = v[k]
+                    return float(num) if k == "$numberDouble" else int(num)
+            if "$date" in v:
+                return int(v["$date"])
+        except (TypeError, ValueError, OverflowError):
+            pass
     return v
+
+
+#: what a value its column cannot hold raises from pyarrow
+_MISFIT = (pa.ArrowException, TypeError, ValueError, OverflowError)
+
+
+def _convert(vals: list, typ: pa.DataType) -> pa.Array:
+    if pa.types.is_integer(typ):
+        # a typed conversion truncates 1.5 to 1 without a word: infer, then
+        # cast (safe: overflow raises)
+        arr = pa.array(vals)
+        if not (pa.types.is_integer(arr.type) or pa.types.is_null(arr.type)):
+            raise TypeError(f"{arr.type} values in an {typ} column")
+        return arr.cast(typ)
+    return pa.array(vals, type=typ)
+
+
+def _fit(v, typ: pa.DataType):
+    """``v`` as a ``typ`` column holds it, or None if it cannot."""
+    try:
+        if type(v) is int and pa.types.is_floating(typ):
+            v = float(v)  # a JSON integer past int64 is still a number
+        _convert([v], typ)
+        return v
+    except _MISFIT:
+        return None
+
+
+def _column(vals: list, typ: pa.DataType) -> pa.Array:
+    """One ``pa.array`` call per column; only a column that holds a misfit
+    is rebuilt, value by value, with the misfits nulled."""
+    try:
+        return _convert(vals, typ)
+    except _MISFIT:
+        return _convert([_fit(v, typ) for v in vals], typ)
 
 
 def _parse_one(s: str | None, cols: list[str]) -> dict:
@@ -49,34 +95,38 @@ def _parse_one(s: str | None, cols: list[str]) -> dict:
         return out
     try:
         d = json.loads(s)
-    except ValueError:
+    except (ValueError, RecursionError):
+        return out
+    if not isinstance(d, dict):
         return out
     patch = d.pop("$set", None)
     unset = d.pop("$unset", None)
     inc = d.pop("$inc", None)
     # any other $-operator ($push/$rename/...) is ignored here and counted
-    # into batch telemetry by the pipeline's probe (reference posture: the
-    # ES syncer translates only $set/$unset, es/syncer.py:182-216; unknown
-    # DDL is logged-and-skipped, mongo/handler.py:156-163)
+    # into batch telemetry by the pipeline's envelope stats (reference
+    # posture: the ES syncer translates only $set/$unset,
+    # es/syncer.py:182-216; unknown DDL is logged-and-skipped,
+    # mongo/handler.py:156-163)
     for k in [k for k in d if k.startswith("$")]:
         d.pop(k)
     if patch is not None or unset is not None or inc is not None:
+        # an operator whose argument is not an object changes nothing, but
+        # the event stays a patch: it must never replace the row
         out["is_patch"] = True
         unset_cols: set = set()
-        if patch:
+        if isinstance(patch, dict):
             for k, v in patch.items():
                 if v is None:
                     unset_cols.add(k)  # $set to null ≡ $unset on fixed schema
                 else:
                     d[k] = v
-        if unset:
+        if isinstance(unset, dict):
             unset_cols.update(unset.keys())
         out["unset_cols"] = sorted(unset_cols)
-        if inc:
+        if isinstance(inc, dict) and inc:
             out["inc_map"] = {
-                k: float(_unwrap(v))
-                for k, v in inc.items()
-                if isinstance(_unwrap(v), (int, float))
+                k: x for k, v in inc.items()
+                if (x := _fit(_unwrap(v), pa.float64())) is not None
             }
     for c in cols:
         if c in d:
@@ -91,41 +141,37 @@ except ImportError:  # pragma: no cover - orjson ships in this env
 
 
 def make_parse_udf(with_tool: bool = True):
-    """Build the Arrow-vectorized parse UDF: string doc → payload struct.
-
-    Iterates a pandas batch inside the UDF (Arrow transfer amortized over
-    thousands of rows); never a row-at-a-time Python UDF.
+    """Build the Arrow parse UDF: string doc → payload struct.
 
     Two tiers per row (guide §4.2 — do the heavy lifting in native code):
-    docs without a ``"$`` byte (no update operators, no BSON extended-JSON
-    scalars — the overwhelming majority of a real oplog) decode with the C
-    JSON parser straight into per-column lists, ~5× cheaper than the
-    general path; any doc containing ``"$`` takes the exact
-    :func:`_parse_one` path, so $set/$unset/$inc and extended-JSON
-    semantics are bit-identical (a false positive — a doc whose PAYLOAD
-    text contains ``"$`` — merely pays the slow path). Output assembles
-    columnar (dict of lists), never via per-row dict records.
+    a doc with neither a ``"$`` byte nor an escaped ``$`` (``\\u0024``) — no
+    update operators, no BSON extended-JSON scalars, the overwhelming
+    majority of a real oplog — decodes with the C JSON parser straight
+    into per-column lists. Any other doc, and any doc the C parser rejects
+    (bare ``NaN``, lone surrogates, ...), takes the exact stdlib
+    :func:`_parse_one` path (a false positive — ``"$`` inside PAYLOAD
+    text — merely pays the slow path).
     """
     schema = payload_parse_schema(with_tool)
-    meta = ("is_patch", "unset_cols", "inc_map")
-    cols = [f.name for f in schema.fields if f.name not in meta]
+    names = [f.name for f in schema.fields]
+    cols = [c for c in names if c not in _META]
+    fields = [pa.field(f.name, to_arrow_type(f.dataType)) for f in schema.fields]
 
-    @F.pandas_udf(schema)
-    def parse_doc(doc: pd.Series) -> pd.DataFrame:
+    @F.arrow_udf(schema)
+    def parse_doc(doc: pa.Array) -> pa.Array:
         loads = _fastjson.loads if _fastjson is not None else json.loads
-        n = len(doc)
-        data: dict = {c: [None] * n for c in cols}
-        patches = [False] * n
-        unsets = [None] * n
-        incs = [None] * n
-        for i, s in enumerate(doc):
+        docs = doc.to_pylist()
+        n = len(docs)
+        data: dict = {c: [None] * n for c in names}
+        data["is_patch"] = [False] * n
+        for i, s in enumerate(docs):
             if not s:
                 continue
-            if '"$' not in s:
+            if '"$' not in s and "\\u0024" not in s:
                 try:
                     d = loads(s)
-                except ValueError:
-                    continue
+                except (ValueError, RecursionError):
+                    d = None  # stdlib decides below
                 if type(d) is dict:
                     for c in cols:
                         v = d.get(c)
@@ -133,21 +179,11 @@ def make_parse_udf(with_tool: bool = True):
                             data[c][i] = v
                     continue
             out = _parse_one(s, cols)
-            for c in cols:
+            for c in names:
                 data[c][i] = out[c]
-            patches[i] = out["is_patch"]
-            unsets[i] = out["unset_cols"]
-            incs[i] = out["inc_map"]
-        data["is_patch"] = patches
-        data["unset_cols"] = unsets
-        data["inc_map"] = incs
-        pdf = pd.DataFrame(data, columns=cols + list(meta))
-        # pandas object→typed for Arrow
-        if "turn_idx" in pdf.columns:
-            pdf["turn_idx"] = pdf["turn_idx"].astype("Int32")
-        if "score" in pdf.columns:
-            pdf["score"] = pdf["score"].astype("float64")
-        return pdf
+        return pa.StructArray.from_arrays(
+            [_column(data[f.name], f.type) for f in fields], fields=fields
+        )
 
     return parse_doc
 
@@ -161,63 +197,3 @@ def parsed_events(df: DataFrame, with_tool: bool = True) -> DataFrame:
     return df.withColumn("_p", udf(F.col("doc"))).select(
         "ts", *extra, "op", "ns", "_p.*"
     )
-
-
-def from_json_fast_path(doc: Column, with_tool: bool = True) -> Column:
-    """JVM-side decode for pure-JSON payloads (no $set / extended JSON):
-    whole-stage-codegen'd, zero Python. Used when the source is known clean;
-    benchmarked against the pandas UDF in bench.py."""
-    fields = "conv_id string, turn_idx int, role string, text string"
-    if with_tool:
-        fields += ", tool string"
-    return F.from_json(doc, fields)
-
-
-def parsed_events_jvm(df: DataFrame, with_tool: bool = True) -> DataFrame:
-    """Pure-JVM parse including ``$set``/``$unset``/``$inc`` handling — same
-    output contract as :func:`parsed_events` but via ``from_json``
-    (whole-stage codegen, zero Python processes). Valid when payloads are
-    plain JSON (no BSON extended-JSON scalars). Known delta vs the pandas
-    path: ``$set`` to JSON null is indistinguishable from field-absent in a
-    struct decode, so set-to-null flows as no-op here (use parse_mode=
-    'pandas' for sources that emit it). Select with
-    ``SyncConfig.parse_mode='jvm'``."""
-    base = "conv_id string, turn_idx int, role string, text string"
-    setf = "text string, role string"
-    if with_tool:
-        base += ", tool string"
-        setf += ", tool string"
-    base += ", score double"
-    setf += ", score double"
-    schema_str = (
-        f"{base}, `$set` struct<{setf}>, "
-        "`$unset` map<string,string>, `$inc` map<string,double>"
-    )
-    # JsonToStructs is CodegenFallback: every column reference would re-parse
-    # the JSON. The explode(array(...)) barrier is a Generate node, so the
-    # parse happens exactly once per row and downstream projections reference
-    # real attributes (measured 2.3× faster than naive multi-reference).
-    extra = ["seq"] if "seq" in df.columns else []
-    p = F.from_json(F.col("doc"), schema_str)
-    exploded = df.select("ts", *extra, "op", "ns", F.explode(F.array(p)).alias("_p"))
-    patch = F.col("_p").getField("$set")
-    unset = F.col("_p").getField("$unset")
-    inc = F.col("_p").getField("$inc")
-    is_patch = patch.isNotNull() | unset.isNotNull() | inc.isNotNull()
-    cols = ["role", "text"] + (["tool"] if with_tool else []) + ["score"]
-    out = [
-        "ts", *extra, "op", "ns",
-        F.col("_p").getField("conv_id").alias("conv_id"),
-        F.col("_p").getField("turn_idx").alias("turn_idx"),
-    ]
-    for c in cols:
-        out.append(
-            F.when(is_patch, patch.getField(c)).otherwise(F.col("_p").getField(c)).alias(c)
-        )
-    out.append(F.coalesce(is_patch, F.lit(False)).alias("is_patch"))
-    out.append(
-        F.when(is_patch, F.coalesce(F.map_keys(unset), F.array().cast("array<string>")))
-        .alias("unset_cols")
-    )
-    out.append(F.when(is_patch, inc).alias("inc_map"))
-    return exploded.select(*out)

@@ -1,12 +1,14 @@
-"""CheckpointLog — per-partition high-watermark + lineage/metrics table.
+"""CheckpointLog — high-watermark + lineage/metrics table.
 
 Reference analogue: the 8-byte optime file flushed every 10 s
 (/root/reference/mongosync/optime_logger.py:21-40,
 common_syncer.py:263-272) and the progress counters
 (/root/reference/mongosync/progress_logger.py:31-86). Upgraded to a real
-table: one row per (batch_id, source partition) with the max applied ts,
-event count and wall time, appended atomically after each MERGE commit so
-any restart can resume from ``max(max_ts)`` and audit full lineage.
+table: one row per committed batch (``partition_id`` -1) with the max
+applied ts, event count (i/u/d/c) and wall time — plus a ``partition_id``
+-2 row counting DDL commands the batch skipped — appended atomically after
+each MERGE commit so any restart can resume from ``max(max_ts)`` and audit
+full lineage.
 
 Storage: append-only parquet, one file per batch, committed via atomic
 rename — same crash-safety argument as the lake manifest. The reference

@@ -80,13 +80,6 @@ class CommitConflict(RuntimeError):
     must re-read the manifest and re-run its merge against it."""
 
 
-class HintViolation(RuntimeError):
-    """A MERGE wrote rows into a bucket outside the caller-supplied
-    changed-bucket hint set. Trusting the hint would wholesale replace that
-    bucket's file list with only the new rows — silent data loss. Raised
-    BEFORE the commit; ``merge`` catches it and retries hint-free."""
-
-
 def bucket_expr(key_cols: list[str], n_buckets: int):
     """Deterministic bucket id for a key — murmur3, the SAME hash family
     Spark's HashPartitioning uses (``F.hash`` == Murmur3, seed 42; the
@@ -481,8 +474,7 @@ class LakeTable:
         self,
         source: DataFrame,
         batch_id: int,
-        changed_buckets: list[int] | None = None,
-        nonnull_new_cols: list[str] | None = None,
+        all_buckets: bool = False,
         compact_threshold: int | None = None,
         retries: int = 2,
     ) -> dict:
@@ -490,14 +482,15 @@ class LakeTable:
         key (LWW-deduped, see operators/dedup.py) with table columns plus
         ``_op`` ('d' delete / anything else upsert) and ``_is_patch``.
 
-        ``changed_buckets`` / ``nonnull_new_cols`` are optional probe hints
-        (see CdcPipeline: a cheap key-only ``from_json`` scan of the raw
-        envelope). When supplied, the expensive source lineage executes in
-        exactly ONE job — the join+write — with no persist round-trip.
-        The hints MUST be derived from the same batch: an under-reported
-        bucket set would mis-insert rows whose target bucket went unread.
-        Without hints the merge probes the source itself (persisting it so
-        the lineage still runs once).
+        By default the merge probes the source itself for the buckets it
+        changes and the new columns it carries (persisting it so the source
+        lineage still runs once), so both are exact by construction.
+        ``all_buckets`` (a batch large enough that essentially every bucket
+        changes) skips that probe: every bucket is rewritten and the
+        expensive source lineage executes in exactly ONE job — the
+        join+write — with no persist round-trip. It is honoured only when
+        the source carries no column the table lacks, since schema
+        evolution needs the probe.
 
         Optimistic-concurrency retry (the Iceberg commit loop): a
         ``CommitConflict`` — a concurrent writer won the version claim, or
@@ -520,8 +513,7 @@ class LakeTable:
                         "version": m["version"]}
             try:
                 return self._merge_attempt(
-                    source, batch_id, m, changed_buckets, nonnull_new_cols,
-                    compact_threshold,
+                    source, batch_id, m, all_buckets, compact_threshold
                 )
             except CommitConflict as e:
                 last_conflict = e
@@ -534,49 +526,44 @@ class LakeTable:
         source: DataFrame,
         batch_id: int,
         m: dict,
-        changed_buckets: list[int] | None,
-        nonnull_new_cols: list[str] | None,
+        all_buckets: bool,
         compact_threshold: int | None,
     ) -> dict:
         """One optimistic MERGE attempt against manifest snapshot ``m``."""
         if m.get("write_mode", "cow") == "mor":
-            def inner(src, bid, mf, hb, hn):
-                return self._merge_mor(src, bid, mf, hb, hn, compact_threshold)
+            def inner(src, bid, mf, changed):
+                return self._merge_mor(src, bid, mf, changed, compact_threshold)
         else:
             inner = self._merge_inner
 
-        if changed_buckets is not None:
-            try:
-                return inner(
-                    source, batch_id, m, changed_buckets, nonnull_new_cols or []
-                )
-            except HintViolation:
-                # fall through to the hint-free path below: the probe's
-                # bucket math disagreed with the table's — recompute the
-                # changed set from the source itself (correct by
-                # construction) instead of silently clobbering a bucket.
-                pass
-        # no hints: pin the source so probe + join share one materialization.
+        if all_buckets and not self._new_cols(source, m):
+            return inner(source, batch_id, m, list(range(m["n_buckets"])))
+        # probe: pin the source so probe + join share one materialization.
         # DISK_ONLY: spark.local.dir is fast local storage (tmpfs here, NVMe
         # on a cluster) and skips the columnar-compression cache build.
         from pyspark import StorageLevel
 
         source = source.persist(StorageLevel.DISK_ONLY)
         try:
-            return inner(source, batch_id, m, None, None)
+            return inner(source, batch_id, m, None)
         finally:
             source.unpersist()
 
+    @staticmethod
+    def _new_cols(source: DataFrame, m: dict) -> list[str]:
+        """Source columns the table schema lacks (schema-evolution
+        candidates)."""
+        return [
+            c for c in source.columns
+            if c not in m["columns"] and c not in MERGE_META_COLS and c != BUCKET_COL
+        ]
+
     def _prep_source(
-        self,
-        source: DataFrame,
-        m: dict,
-        hint_buckets: list[int] | None,
-        hint_nonnull: list[str] | None,
+        self, source: DataFrame, m: dict, changed: list[int] | None
     ) -> dict:
         """Shared MERGE head for both write modes: cast the source to the
         table schema, detect schema-evolution columns, and compute the
-        changed-bucket set (from hints or a one-aggregation probe whose
+        changed-bucket set (given, or from a one-aggregation probe whose
         collect is ≤ n_buckets boolean rows, never row data).
 
         Evolution: batch columns absent from the table schema merge in as
@@ -589,10 +576,7 @@ class LakeTable:
         table_cols = [f.name for f in schema.fields]
 
         src_schema = {f.name: f for f in source.schema.fields}
-        new_cols = [
-            c for c in source.columns
-            if c not in table_cols and c not in MERGE_META_COLS and c != BUCKET_COL
-        ]
+        new_cols = self._new_cols(source, m)
 
         has_unset = _UNSET in source.columns
         has_inc = _INC in source.columns
@@ -607,10 +591,8 @@ class LakeTable:
             *opt_meta,
         ).withColumn(BUCKET_COL, bucket_expr(manifest_bucket_cols(m), n_buckets))
 
-        if hint_buckets is not None:
-            changed = sorted(hint_buckets)
-            evolved = [c for c in new_cols if c in (hint_nonnull or [])]
-        else:
+        evolved: list[str] = []
+        if changed is None:
             # a new column counts as "carried" when the batch has a value OR
             # a residual $inc for it (an increment on a not-yet-existing
             # column must still evolve the schema)
@@ -656,14 +638,13 @@ class LakeTable:
         source: DataFrame,
         batch_id: int,
         m: dict,
-        hint_buckets: list[int] | None,
-        hint_nonnull: list[str] | None,
+        changed: list[int] | None,
     ) -> dict:
         t0 = time.monotonic()
         key_cols: list[str] = m["key_cols"]
         ts_col: str = m["ts_col"]
         n_buckets: int = m["n_buckets"]
-        prep = self._prep_source(source, m, hint_buckets, hint_nonnull)
+        prep = self._prep_source(source, m, changed)
         src, schema, table_cols, changed = (
             prep["src"], prep["schema"], prep["table_cols"], prep["changed"]
         )
@@ -774,16 +755,11 @@ class LakeTable:
             aligned=m.get("files_per_bucket", 1) == 1,
         )
         # Guard: every written bucket must be one we read (a source row whose
-        # true bucket fell outside the hint set would otherwise replace that
-        # bucket's files with only itself — silent loss of its other keys).
-        # Raised BEFORE commit; merge() retries hint-free.
+        # true bucket fell outside the changed set would otherwise replace
+        # that bucket's files with only itself — silent loss of its other
+        # keys). Raised BEFORE commit.
         stray = set(new_files) - {str(b) for b in changed}
         if stray:
-            if hint_buckets is not None:
-                raise HintViolation(
-                    f"hinted buckets {sorted(changed)} but merge output "
-                    f"touched {sorted(stray)}"
-                )
             raise RuntimeError(
                 f"internal bucket-math mismatch: probe said {sorted(changed)}, "
                 f"write produced {sorted(stray)}"
@@ -814,8 +790,7 @@ class LakeTable:
         source: DataFrame,
         batch_id: int,
         m: dict,
-        hint_buckets: list[int] | None,
-        hint_nonnull: list[str] | None,
+        changed: list[int] | None,
         compact_threshold: int | None = None,
     ) -> dict:
         """Merge-on-read write path: append the batch's net events as
@@ -826,7 +801,7 @@ class LakeTable:
         ``compact_threshold`` bounds read amplification by folding a
         bucket's deltas into its base once that many accumulate."""
         t0 = time.monotonic()
-        prep = self._prep_source(source, m, hint_buckets, hint_nonnull)
+        prep = self._prep_source(source, m, changed)
         src, schema, table_cols, changed = (
             prep["src"], prep["schema"], prep["table_cols"], prep["changed"]
         )
@@ -852,11 +827,6 @@ class LakeTable:
         )
         stray = set(new_files) - {str(b) for b in changed}
         if stray:
-            if hint_buckets is not None:
-                raise HintViolation(
-                    f"hinted buckets {sorted(changed)} but delta write "
-                    f"touched {sorted(stray)}"
-                )
             raise RuntimeError(
                 f"internal bucket-math mismatch: probe said {sorted(changed)}, "
                 f"delta write produced {sorted(stray)}"

@@ -57,7 +57,7 @@ OPLOG_SCHEMA = T.StructType(
     ]
 )
 
-#: Watermark / lineage / metrics table appended once per (batch, partition).
+#: Watermark / lineage / metrics table: one row per batch (see CheckpointLog).
 #: Reference analogue: the 8-byte optime file
 #: (/root/reference/mongosync/optime_logger.py:21-40) plus progress counters
 #: (/root/reference/mongosync/progress_logger.py:31-86).

@@ -19,7 +19,9 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(
+            os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+        )
     if shuffle_partitions is None:
         shuffle_partitions = cores
     # shuffle/spill scratch: prefer the RAM-backed tmpfs in this sandbox —

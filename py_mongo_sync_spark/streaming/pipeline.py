@@ -6,14 +6,15 @@ machine, mongo/syncer.py:239-366 replay loop):
 
 1. ``initial_sync``      — batch read → LakeTable.create_or_replace (K1)
 2. ``run_stream``        — readStream → transform → ``foreachBatch``:
-   a. per-source-partition metrics (A3/A4: progress + max-ts watermark)
+   a. per-batch envelope stats (A3/A4: progress + max-ts watermark)
    b. staleness assertion on resume (S4, mongo/syncer.py:277-284)
    c. ns filter / rename / projection (P1-P6) — column expressions
-   d. vectorized doc parse (pandas UDF)
+   d. vectorized doc parse (Arrow UDF, the only doc decoder)
    e. per-key LWW fold to net events (H2/H3 ordering invariant)
    f. LakeTable.merge — bucket-pruned copy-on-write MERGE (K2/K3/K4),
       idempotent on batch_id, monotone-ts guarded
-   g. CheckpointLog.append — lineage/metrics rows (optime_logger analogue)
+   g. CheckpointLog.append — one lineage/metrics row per batch
+      (optime_logger analogue)
 
 Stage telemetry mirrors the reference's 4-stage machine
 (STOPPED → INITIAL_SYNC → POST_INITIAL_SYNC → OPLOG_SYNC,
@@ -93,6 +94,9 @@ class CdcPipeline:
         self.cplog = CheckpointLog(spark, cfg.checkpoint_path)
         self.stage = "STOPPED"
         self._resume_checked = not self.cplog.exists()
+        #: namespaces the current batch accepts (set per batch from its
+        #: rename_table commands; None = just dst_ns)
+        self._batch_accept_ns: set[str] | None = None
         self.last_stats: list[dict] = []
         #: optional per-batch stats hook (the CLI's --follow mode wires a
         #: JSON logger here); called with the apply_batch result dict
@@ -119,16 +123,10 @@ class CdcPipeline:
 
     def transform(self, events: DataFrame, multi_ns: list[str] | None = None) -> DataFrame:
         """Envelope → parsed/filtered/renamed/projected payload rows.
-        All column expressions + one Arrow-vectorized parse UDF. With
-        ``multi_ns`` the ns column survives (MultiCdcPipeline parses the
-        whole batch ONCE and routes per-table afterwards)."""
-        df = self._filtered(events, multi_ns)
-        if self.cfg.parse_mode == "jvm":
-            from py_mongo_sync_spark.functions.parse import parsed_events_jvm
-
-            df = parsed_events_jvm(df, with_tool=True)
-        else:
-            df = parsed_events(df, with_tool=True)
+        All column expressions + one Arrow parse UDF. With ``multi_ns`` the
+        ns column survives (MultiCdcPipeline parses the whole batch ONCE
+        and routes per-table afterwards)."""
+        df = parsed_events(self._filtered(events, multi_ns), with_tool=True)
         keep = ["ts", "op", "is_patch", "unset_cols", "inc_map", "conv_id", "turn_idx"]
         if multi_ns is not None:
             keep.insert(0, "ns")
@@ -138,10 +136,13 @@ class CdcPipeline:
         return df.where(F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull())
 
     def _filtered(
-        self, events: DataFrame, multi_ns: list[str] | None = None
+        self,
+        events: DataFrame,
+        multi_ns: list[str] | None = None,
+        ops: tuple[str, ...] = ("i", "u", "d"),
     ) -> DataFrame:
         """The envelope-level filter/rename shared by transform() and the
-        key probe — must keep exactly the same rows in both."""
+        envelope stats — must keep exactly the same data rows in both."""
         op, ns = F.col("op"), F.col("ns")
         df = events.where(
             valid_oplog_filter(self.cfg, op, ns) & system_ns_filter(ns)
@@ -154,151 +155,58 @@ class CdcPipeline:
             # name the same (renamed) table, so pre- and post-rename events
             # of a mixed batch land together, like the reference's
             # sequential replay where the command is a barrier
-            accept = sorted(getattr(self, "_batch_accept_ns", None) or {self.dst_ns})
+            accept = sorted(self._batch_accept_ns or {self.dst_ns})
             df = df.where(F.col("ns").isin(accept))
-        return df.where(op.isin("i", "u", "d"))
+        return df.where(op.isin(*ops))
 
-    def _evolution_candidates(self) -> list[str]:
-        """Payload columns not yet in the table schema (and not projected
-        away) — the set the probe must check for non-null values."""
-        table_cols = set(self.table.manifest()["columns"])
-        return [
-            c for c in PAYLOAD_COLS
-            if c not in KEY_COLS and c not in table_cols
-            and (not self.cfg.include_fields or c in self.cfg.include_fields)
-        ]
-
-    def _batch_probe(
-        self,
-        events: DataFrame,
-        multi_ns: list[str] | None = None,
-        cand_override: list[str] | None = None,
+    def _envelope_stats(
+        self, events: DataFrame, multi_ns: list[str] | None = None
     ) -> dict:
-        """ONE cheap scan of the raw batch envelope that yields everything
-        the driver needs before the MERGE:
+        """The batch's only scan before the MERGE: ONE aggregation over the
+        envelope (ts/op/ns, plus the doc of update and DDL rows — payloads
+        are never parsed here). Per namespace it yields:
 
-        - per-bucket stats (count, max/min optime) → watermark/lineage rows
-          (A4, optime_logger analogue) and the staleness gate
-        - the changed-bucket set + evolution flags → MERGE hints
-        - the batch's DDL commands (op='c') → explicit schema evolution
-          (reference 'c' handling, mongo/handler.py:156-163)
+        - the event count (i/u/d/c) and data-event count, and the optime
+          range → the lineage row (A4, optime_logger analogue) and the
+          staleness gate;
+        - the batch's DDL commands (op='c') in optime order → explicit
+          schema evolution (reference 'c' handling, mongo/handler.py:156-163);
+        - the count of updates carrying an operator the MERGE cannot
+          express (``UNSUPPORTED_OPS_RE``).
 
-        Key fields decode via ``json_tuple`` (one streaming JSON parse per
-        row; from_json/get_json_object are CodegenFallback and re-parse per
-        reference — measured 2.5× slower). The expensive full parse+fold
-        then executes exactly once, inside the MERGE join job.
-
-        The probe's bucket ids MUST equal the MERGE's: Spark's Murmur3
-        hashes int and long differently, so the key columns are cast to the
-        MANIFEST schema's key types (not a hard-coded width) and extended-
-        JSON scalars are decoded exactly like the parse UDF. A residual
-        mismatch is caught by LakeTable's hint-violation fallback.
+        Returns one stats dict, or with ``multi_ns`` one per namespace.
         """
-        from pyspark.sql import types as T
-
-        from py_mongo_sync_spark.plans.lake import bucket_expr
-
-        m = self.table.manifest()
-        tschema = T.StructType.fromJson(m["schema"])
-        cand = cand_override if cand_override is not None else self._evolution_candidates()
-        op, ns = F.col("op"), F.col("ns")
-        base = events.where(
-            valid_oplog_filter(self.cfg, op, ns) & system_ns_filter(ns)
-        ).withColumn("ns", rename_ns(self.cfg, ns))
-        if multi_ns is not None:
-            base = base.where(F.col("ns").isin(multi_ns))
-        else:
-            base = base.where(F.col("ns") == self.dst_ns)
-        base = base.where(op.isin("i", "u", "d", "c"))
-
-        group_ns = ["ns"] if multi_ns is not None else []
-        jt = base.select(
-            "ts", "op", *group_ns,
-            F.json_tuple(F.col("doc"), "conv_id", "turn_idx", "$set", "$inc", *cand).alias(
-                "conv_id", "turn_idx", "_set", "_inc", *[f"_{c}" for c in cand]
-            ),
-            F.col("doc"),
-        )
-        def key_cast(name: str):
-            """json_tuple string → the table schema's key type, decoding
-            BSON extended-JSON scalars ({"$numberLong": "7"}) the same way
-            the parse UDF does (functions/parse.py:_unwrap)."""
-            raw = F.col(name)
-            dtype = tschema[name].dataType
-            if isinstance(dtype, T.StringType):
-                return raw.alias(name)
-            num = F.regexp_extract(
-                raw, r'\{\s*"\$number(?:Int|Long|Double)"\s*:\s*"?(-?[0-9.eE+]+)"?\s*\}', 1
-            )
-            decoded = F.when(raw.startswith("{"), F.nullif(num, F.lit(""))).otherwise(raw)
-            return decoded.cast(dtype).alias(name)
-
-        keyed = jt.select(
-            "ts", "op", *group_ns,
-            *[key_cast(k) for k in KEY_COLS],
-            *[
-                (
-                    F.col(f"_{c}").isNotNull()
-                    | F.get_json_object(F.col("_set"), f"$.{c}").isNotNull()
-                    | F.get_json_object(F.col("_inc"), f"$.{c}").isNotNull()
-                ).alias(c)
-                for c in cand
-            ],
-            ((F.col("op") == "u") & F.col("doc").rlike(UNSUPPORTED_OPS_RE)).alias("_unsup"),
-            F.when(F.col("op") == "c", F.col("doc")).alias("_cmd"),
-        ).where(
-            (F.col("op") == "c")
-            | (F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull())
-        )
-        # data rows group by (ns,) bucket; 'c' rows land in the NULL-bucket group
+        op = F.col("op")
+        group = ["ns"] if multi_ns is not None else []
         rows = (
-            keyed.withColumn(
-                "_b",
-                F.when(F.col("op") != "c", bucket_expr(KEY_COLS, m["n_buckets"])),
-            )
-            .groupBy(*group_ns, "_b")
+            self._filtered(events, multi_ns, ops=("i", "u", "d", "c"))
+            .groupBy(*group)
             .agg(
-                F.count(F.lit(1)).alias("_n"),
-                F.max("ts").alias("_max_ts"),
-                F.min("ts").alias("_min_ts"),
-                F.sum(F.col("_unsup").cast("long")).alias("_n_unsup"),
-                *[F.max(F.col(c)).alias(c) for c in cand],
+                F.count(F.lit(1)).alias("n_events"),
+                F.count(F.when(op != "c", 1)).alias("n_data"),
+                F.max("ts").alias("max_ts"),
+                F.min("ts").alias("min_ts"),
+                F.count(F.when((op == "u") & F.col("doc").rlike(UNSUPPORTED_OPS_RE), 1))
+                .alias("n_unsupported_ops"),
                 # when() is NULL for data rows and collect_list skips NULLs,
                 # so only the rare 'c' rows are ever buffered
-                F.collect_list(
-                    F.when(F.col("op") == "c", F.struct("ts", "_cmd"))
-                ).alias("_cmds"),
+                F.collect_list(F.when(op == "c", F.struct("ts", "doc"))).alias("cmds"),
             )
             .collect()
         )
-        if multi_ns is None:
-            return self._probe_dict(rows, cand)
-        return {
-            nsv: self._probe_dict([r for r in rows if r["ns"] == nsv], cand)
-            for nsv in multi_ns
-        }
 
-    @staticmethod
-    def _probe_dict(rows: list, cand: list[str]) -> dict:
-        data_rows = [r for r in rows if r["_b"] is not None]
-        cmd_rows = [r for r in rows if r["_b"] is None]
-        commands = sorted(
-            ((c["ts"], c["_cmd"]) for r in cmd_rows for c in r["_cmds"] if c["_cmd"]),
-        )
-        all_ts = [r["_max_ts"] for r in rows] + [r["_min_ts"] for r in rows]
-        return {
-            "buckets": sorted(r["_b"] for r in data_rows),
-            "nonnull_new": [c for c in cand if any(r[c] for r in data_rows)],
-            "bucket_stats": [
-                {"partition_id": r["_b"], "max_ts": r["_max_ts"],
-                 "min_ts": r["_min_ts"], "n": r["_n"]}
-                for r in data_rows
-            ],
-            "commands": commands,
-            "n_events": sum(r["_n"] for r in rows),
-            "n_unsupported_ops": sum(r["_n_unsup"] or 0 for r in rows),
-            "min_ts": min((t for t in all_ts if t is not None), default=None),
-        }
+        def as_dict(r) -> dict:
+            if r is None:  # a namespace with no events in this batch
+                return {"n_events": 0, "n_data": 0, "max_ts": None, "min_ts": None,
+                        "n_unsupported_ops": 0, "commands": []}
+            d = r.asDict()
+            d["commands"] = sorted((c["ts"], c["doc"]) for c in d.pop("cmds") if c["doc"])
+            return d
+
+        if multi_ns is None:
+            return as_dict(rows[0])  # a global aggregate always yields one row
+        by_ns = {r["ns"]: r for r in rows}
+        return {nsv: as_dict(by_ns.get(nsv)) for nsv in multi_ns}
 
     def _apply_commands(self, commands: list[tuple[int, str]]) -> dict:
         """Replay DDL commands — skip-on-failure like the reference
@@ -383,115 +291,34 @@ class CdcPipeline:
                    "version": self.table.latest_version(), "n_events": 0}
             self.last_stats.append(res)
             return res
-        # (a) op-level stats: a column-pruned scan (ts/op/ns only — the doc
-        # payload is never read) giving counts, watermarks and whether any
-        # DDL commands exist
-        op_ns = F.col("op"), F.col("ns")
-        enveloped = events.where(
-            valid_oplog_filter(self.cfg, *op_ns) & system_ns_filter(op_ns[1])
-        ).withColumn("ns", rename_ns(self.cfg, op_ns[1]))
-        enveloped = enveloped.where(F.col("ns") == self.dst_ns).where(
-            F.col("op").isin("i", "u", "d", "c")
-        )
-        op_stats = {
-            r["op"]: r
-            for r in enveloped.groupBy("op")
-            .agg(F.count(F.lit(1)).alias("n"), F.max("ts").alias("max_ts"),
-                 F.min("ts").alias("min_ts"))
-            .collect()
-        }
-        n_data = sum(r["n"] for o, r in op_stats.items() if o in ("i", "u", "d"))
-        n_events = sum(r["n"] for r in op_stats.values())
-        cand = self._evolution_candidates()
-
-        # (c) MERGE hints: for small batches run the key-probe doc scan —
-        # bucket pruning pays for itself; for large homogeneous batches
-        # every bucket changes anyway, so skip the pre-parse entirely. When
-        # a large batch still needs schema-candidate detection (cand), the
-        # raw-doc json_tuple probe scan is skipped too: the MERGE's own
-        # hint-free path persists the parsed+folded source and derives the
-        # changed-bucket set and evolved columns from THAT (exact by
-        # construction) — one cheap aggregate over the cached fold instead
-        # of a second JSON decode of every raw doc (measured ~1 s of the
-        # conversation_rollup replay at sf0.1, ~3 s at sf1.0).
-        big = n_data >= self.cfg.n_buckets * self.cfg.probe_skip_factor
-        if not big:
-            probe = self._batch_probe(events)
-        else:
-            commands = []
-            if op_stats.get("c", {"n": 0})["n"] > 0:
-                commands = sorted(
-                    (r["ts"], r["doc"])
-                    for r in enveloped.where("op = 'c'").select("ts", "doc").collect()
-                )
-            all_ts = [r["max_ts"] for r in op_stats.values()] + [
-                r["min_ts"] for r in op_stats.values()
-            ]
-            probe = {
-                "buckets": list(range(self.table.manifest()["n_buckets"])),
-                "nonnull_new": [],
-                "bucket_stats": [
-                    {
-                        "partition_id": -1,
-                        "max_ts": max(all_ts) if all_ts else None,
-                        "min_ts": min(all_ts) if all_ts else None,
-                        "n": n_events,
-                    }
-                ],
-                "commands": commands,
-                "n_events": n_events,
-                # the big-batch path never scans the doc column, so the
-                # unsupported-operator count is unmeasured (None, not 0) —
-                # EXCEPT under strict_ops, where unmeasured = unenforced
-                # (r2 ADVICE: a 4M-event batch carrying $push would apply
-                # partially despite strict mode). The rlike aggregate scans
-                # only update-ops' doc column: cheap next to the MERGE.
-                "n_unsupported_ops": None,
-                "min_ts": min(all_ts) if all_ts else None,
-            }
-            if self.cfg.strict_ops:
-                probe["n_unsupported_ops"] = (
-                    enveloped.where(
-                        (F.col("op") == "u")
-                        & F.col("doc").rlike(UNSUPPORTED_OPS_RE)
-                    ).count()
-                )
-            if cand:
-                # evolution candidates outstanding: hand the MERGE no bucket
-                # hints so its persisted-source probe detects evolved
-                # columns (and the true changed set) from the parsed fold
-                probe["buckets"] = None
+        # (a) envelope stats under this table's own namespace
+        self._batch_accept_ns = None
+        stats = self._envelope_stats(events)
         t_pstats = time.monotonic() - t0
 
         # rename_table commands in THIS batch: accept events under both the
         # old and the new namespace (same destination table — the rename is
         # a metadata move); the table/dst_ns retarget itself happens in
-        # _finish_batch's command replay, before the MERGE executes. Bucket
-        # hints probed under the old filter may under-report; the
-        # pre-commit HintViolation guard retries hint-free in that case.
+        # _finish_batch's command replay, before the MERGE executes.
         self._batch_accept_ns = {self.dst_ns} | {
             c.get("to")
-            for _t, d in probe["commands"]
+            for _t, d in stats["commands"]
             for c in [self._safe_cmd(d)]
             if c.get("cmd") == "rename_table" and c.get("to")
         }
 
         # (d) transform, (e) fold to one net event per key — lazily; this
-        # lineage executes exactly once, inside the MERGE join job. With
-        # fold_salt the fold runs in two time-sliced phases so one flooded
-        # key can't serialize a whole task (H2 skew bound).
+        # lineage executes once, inside the MERGE. With fold_salt the fold
+        # runs in two time-sliced phases so one flooded key can't serialize
+        # a whole task (H2 skew bound).
         parsed = self.transform(events)
-        ts_vals = [s["max_ts"] for s in probe["bucket_stats"]] + [
-            s["min_ts"] for s in probe["bucket_stats"]
-        ]
-        ts_vals = [t for t in ts_vals if t is not None]
-        if self.cfg.fold_salt and ts_vals:
+        if self.cfg.fold_salt and stats["min_ts"] is not None:
             from py_mongo_sync_spark.operators.dedup import fold_net_events_salted
 
             payload = [c for c in PAYLOAD_COLS if c in parsed.columns]
             folded = fold_net_events_salted(
                 parsed, key_cols=KEY_COLS, payload_cols=payload,
-                ts_lo=min(ts_vals), ts_hi=max(ts_vals),
+                ts_lo=stats["min_ts"], ts_hi=stats["max_ts"],
                 n_salt=self.cfg.fold_salt,
                 ts_col="ts", op_col="op", patch_col="is_patch",
                 seq_col="seq" if "seq" in parsed.columns else None,
@@ -499,8 +326,7 @@ class CdcPipeline:
             )
         else:
             folded = self._fold(parsed)
-        return self._finish_batch(folded, probe, batch_id, t0,
-                                  n_events=n_events, t_pstats=t_pstats)
+        return self._finish_batch(folded, stats, batch_id, t0, t_pstats=t_pstats)
 
     @staticmethod
     def _fold(parsed: DataFrame, extra_keys: list[str] | None = None) -> DataFrame:
@@ -515,89 +341,69 @@ class CdcPipeline:
     def _finish_batch(
         self,
         folded: DataFrame,
-        probe: dict,
+        stats: dict,
         batch_id: int,
         t0: float,
-        n_events: int | None = None,
         t_pstats: float = 0.0,
     ) -> dict:
         """Apply tail for an already-folded net-event source: strictness +
-        staleness gates, DDL replay, MERGE with probe hints, lineage rows,
-        version expiry. Shared by the single-table path and
-        MultiCdcPipeline's single-scan fan-out."""
+        staleness gates, DDL replay, MERGE, lineage row, version expiry.
+        Shared by the single-table path and MultiCdcPipeline's single-scan
+        fan-out."""
         # unsupported-update-operator telemetry (module const doc); strict
         # mode fails the batch BEFORE any partial apply
-        if self.cfg.strict_ops and probe.get("n_unsupported_ops") is None:
-            # unmeasured strictness is unenforced strictness: every path is
-            # supposed to measure when strict_ops is set, so reaching here
-            # is a bug — fail the batch rather than maybe-partially apply
+        if stats["n_unsupported_ops"] and self.cfg.strict_ops:
             raise RuntimeError(
-                f"batch {batch_id}: unsupported-operator count was not "
-                "measured but strict_ops=True — refusing to apply"
-            )
-        if probe.get("n_unsupported_ops") and self.cfg.strict_ops:
-            raise RuntimeError(
-                f"batch {batch_id}: {probe['n_unsupported_ops']} events carry "
+                f"batch {batch_id}: {stats['n_unsupported_ops']} events carry "
                 "update operators the lake MERGE cannot express "
                 "(strict_ops=True)"
             )
 
         # (b) resume staleness gate (reference mongo/syncer.py:277-284)
-        if not self._resume_checked and probe["min_ts"] is not None:
-            self.cplog.assert_not_stale(probe["min_ts"])
+        if not self._resume_checked and stats["min_ts"] is not None:
+            self.cplog.assert_not_stale(stats["min_ts"])
         self._resume_checked = True
         self.stage = "OPLOG_SYNC"
 
         # DDL replication ('c' ops) before the data MERGE — commands are
         # barriers in the reference's replay loop (mongo/syncer.py:303-317)
         ddl_stats = None
-        if probe["commands"]:
-            ddl_stats = self._apply_commands(probe["commands"])
+        if stats["commands"]:
+            ddl_stats = self._apply_commands(stats["commands"])
 
         # envelope optime → the table's row timestamp
         source = folded.withColumn(
             "ts", F.timestamp_seconds(F.lit(FIXTURE_EPOCH) + F.col("ts"))
         )
-        # evolution hints restricted to THIS table's candidates (a shared
-        # multi-ns probe reports the union)
-        cand = set(self._evolution_candidates())
 
-        # (f) MERGE
+        # (f) MERGE. Below n_buckets × probe_skip_factor data events the
+        # MERGE probes the parsed fold for the changed buckets and evolved
+        # columns (bucket pruning pays for itself); above it essentially
+        # every bucket changes, so it rewrites them all without the probe.
         res = self.table.merge(
             source, batch_id=batch_id,
-            changed_buckets=probe["buckets"],
-            nonnull_new_cols=[c for c in probe["nonnull_new"] if c in cand],
+            all_buckets=stats["n_data"] >= self.cfg.n_buckets * self.cfg.probe_skip_factor,
             compact_threshold=self.cfg.compact_threshold,
         )
 
-        # (g) lineage/metrics — one row per bucket (the engine's partition
-        # unit; reference analogue: per-shard optime, optime_logger.py:21-40).
-        # A replayed batch (batch_id already committed) appends NOTHING:
-        # duplicate lineage rows would inflate n_events audits.
+        # (g) lineage/metrics — one row per batch (reference analogue: the
+        # optime file, optime_logger.py:21-40). A replayed batch (batch_id
+        # already committed) appends NOTHING: duplicate lineage rows would
+        # inflate n_events audits.
         wall_ms = int((time.monotonic() - t0) * 1000)
         if not res.get("skipped"):
-            rows = [
-                {
-                    "batch_id": batch_id,
-                    "partition_id": r["partition_id"],
-                    "max_ts": r["max_ts"],
-                    "n_events": r["n"],
-                    "wall_ms": wall_ms,
-                    "committed_at_seq": batch_id,
-                    "table_version": res.get("version"),
-                }
-                for r in probe["bucket_stats"]
-            ]
+            row = {"batch_id": batch_id, "wall_ms": wall_ms,
+                   "committed_at_seq": batch_id, "table_version": res.get("version")}
+            rows = []
+            if stats["n_events"]:
+                rows.append(dict(row, partition_id=-1, max_ts=stats["max_ts"],
+                                 n_events=stats["n_events"]))
             # partition_id=-2: skipped-DDL marker row (n_events = how many
             # commands were dropped) — operators can audit lost DDL from the
             # lineage table alone
             if ddl_stats and ddl_stats["skipped"]:
-                rows.append({
-                    "batch_id": batch_id, "partition_id": -2, "max_ts": None,
-                    "n_events": ddl_stats["skipped"], "wall_ms": wall_ms,
-                    "committed_at_seq": batch_id,
-                    "table_version": res.get("version"),
-                })
+                rows.append(dict(row, partition_id=-2, max_ts=None,
+                                 n_events=ddl_stats["skipped"]))
             self.cplog.append(rows)
             # storage lifecycle: a continuous stream creates one version per
             # batch — without expiry a CoW table's history grows unboundedly
@@ -613,20 +419,15 @@ class CdcPipeline:
                 res["compacted_cp_files"] = self.cplog.compact()
 
         res.update(
-            n_events=n_events if n_events is not None else probe["n_events"],
-            wall_ms=wall_ms, t_pstats=round(t_pstats, 2),
-            n_unsupported_ops=probe.get("n_unsupported_ops"),
+            n_events=stats["n_events"], wall_ms=wall_ms, t_pstats=round(t_pstats, 2),
+            n_unsupported_ops=stats["n_unsupported_ops"],
         )
         # replication lag — the reference's delay gauge (now - last applied
         # optime, common_syncer.py:246-260); envelope ts is relative to
         # FIXTURE_EPOCH, the same base the table's row ts uses
-        applied_max = max(
-            (r["max_ts"] for r in probe["bucket_stats"] if r["max_ts"] is not None),
-            default=None,
-        )
-        if not res.get("skipped") and applied_max is not None:
+        if not res.get("skipped") and stats["max_ts"] is not None:
             res["replication_lag_sec"] = round(
-                max(0.0, time.time() - (FIXTURE_EPOCH + applied_max)), 1
+                max(0.0, time.time() - (FIXTURE_EPOCH + stats["max_ts"])), 1
             )
         if ddl_stats is not None:
             res["ddl"] = ddl_stats
@@ -724,8 +525,8 @@ class MultiCdcPipeline:
             self.pipes = dict(sorted(remap.items()))
 
     def apply_batch(self, events: DataFrame, batch_id: int) -> dict[str, dict]:
-        """Single-scan fan-out: ONE shared probe grouped by (ns, bucket) and
-        ONE parse+fold over the whole microbatch (persisted), then a
+        """Single-scan fan-out: ONE shared envelope aggregation grouped by
+        ns and ONE parse+fold over the whole microbatch (persisted), then a
         per-table MERGE of each namespace's slice. The r1 version re-ran the
         full probe+parse per namespace — N scans of the same raw batch, a
         driver-side serialization that dies at the reference's real workload
@@ -734,7 +535,6 @@ class MultiCdcPipeline:
         import time as _time
 
         from pyspark import StorageLevel
-        from pyspark.sql import types as T
 
         t0 = _time.monotonic()
         self._resync_routing()
@@ -751,28 +551,9 @@ class MultiCdcPipeline:
             return results
 
         lead = next(iter(pending.values()))
-        # the shared probe hashes keys at ONE schema's key types — verify the
-        # destinations agree (they share the transcripts key); heterogeneous
-        # key schemas fall back to the per-pipe path, correctness first
-        key_sigs = {
-            tuple(
-                str(T.StructType.fromJson(p.table.manifest()["schema"])[k].dataType)
-                for k in KEY_COLS
-            )
-            for p in pending.values()
-        }
-        if len(key_sigs) > 1:
-            results.update(
-                {ns: p.apply_batch(events, batch_id) for ns, p in pending.items()}
-            )
-            return results
-
         ns_list = sorted(pending)
-        cand_union = sorted(
-            {c for p in pending.values() for c in p._evolution_candidates()}
-        )
-        probes = lead._batch_probe(events, multi_ns=ns_list, cand_override=cand_union)
-        t_probe = _time.monotonic() - t0
+        stats = lead._envelope_stats(events, multi_ns=ns_list)
+        t_pstats = _time.monotonic() - t0
 
         parsed = lead.transform(events, multi_ns=ns_list)
         folded = lead._fold(parsed, extra_keys=["ns"]).persist(StorageLevel.DISK_ONLY)
@@ -795,8 +576,8 @@ class MultiCdcPipeline:
             )
             slice_df = folded.where(F.col("ns") == ns).drop("ns")
             return ns, p._finish_batch(
-                slice_df, probes[ns], batch_id, _time.monotonic(),
-                t_pstats=t_probe,
+                slice_df, stats[ns], batch_id, _time.monotonic(),
+                t_pstats=t_pstats,
             )
 
         workers = max(1, min(self.merge_parallelism, len(ns_list)))

@@ -40,7 +40,6 @@ checkpoint_path = "/lake/cp"
 [engine]
 n_buckets = 8
 write_mode = "mor"
-parse_mode = "jvm"
 
 [sync]
 start_optime = 777
@@ -55,7 +54,7 @@ db = "logs"
 """)
     cfg, extras = load_config(conf)
     assert cfg.dst_path == "/lake/t" and cfg.checkpoint_path == "/lake/cp"
-    assert cfg.n_buckets == 8 and cfg.write_mode == "mor" and cfg.parse_mode == "jvm"
+    assert cfg.n_buckets == 8 and cfg.write_mode == "mor"
     assert cfg.include_colls == frozenset(
         {"chat.transcripts", "chat.notes", "logs.*"})
     assert cfg.db_mapping == {"chat": "chat_v2"}

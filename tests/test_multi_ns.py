@@ -47,9 +47,10 @@ def test_multi_namespace_routing(spark, tmp_path):
 
 def test_multi_ns_single_scan_four_namespaces(spark, tmp_path, monkeypatch):
     """The r1 MultiCdcPipeline re-ran probe+parse once PER namespace (N full
-    scans of the raw batch). Now: exactly ONE shared probe and ONE
-    transform/fold per microbatch regardless of namespace count — verified
-    by counting invocations — with per-ns final states still exact."""
+    scans of the raw batch). Now: exactly ONE shared envelope aggregation
+    and ONE transform/fold per microbatch regardless of namespace count —
+    verified by counting invocations — with per-ns final states still
+    exact."""
     from py_mongo_sync_spark.streaming import pipeline as P
 
     ns_list = [
@@ -68,24 +69,24 @@ def test_multi_ns_single_scan_four_namespaces(spark, tmp_path, monkeypatch):
     multi = MultiCdcPipeline(spark, cfg, ns_list)
     multi.initial_sync({ns: snap for ns in ns_list})
 
-    calls = {"probe": 0, "transform": 0}
-    orig_probe = P.CdcPipeline._batch_probe
+    calls = {"stats": 0, "transform": 0}
+    orig_stats = P.CdcPipeline._envelope_stats
     orig_transform = P.CdcPipeline.transform
 
-    def probe_counting(self, *a, **kw):
-        calls["probe"] += 1
-        return orig_probe(self, *a, **kw)
+    def stats_counting(self, *a, **kw):
+        calls["stats"] += 1
+        return orig_stats(self, *a, **kw)
 
     def transform_counting(self, *a, **kw):
         calls["transform"] += 1
         return orig_transform(self, *a, **kw)
 
-    monkeypatch.setattr(P.CdcPipeline, "_batch_probe", probe_counting)
+    monkeypatch.setattr(P.CdcPipeline, "_envelope_stats", stats_counting)
     monkeypatch.setattr(P.CdcPipeline, "transform", transform_counting)
 
     res = multi.apply_batch(ev, 0)
     assert set(res) == set(ns_list)
-    assert calls == {"probe": 1, "transform": 1}
+    assert calls == {"stats": 1, "transform": 1}
 
     snap_pdf, ev_pdf = snap.toPandas(), ev.toPandas()
     counts = set()

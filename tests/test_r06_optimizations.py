@@ -9,6 +9,7 @@ before the driver's oracle does.
 from __future__ import annotations
 
 import json
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -28,7 +29,7 @@ PARSE_DOCS = [
     json.dumps({"conv_id": "c2", "turn_idx": 0}),
     # $set patch (slow path)
     json.dumps({"conv_id": "c1", "turn_idx": 1, "$set": {"text": "patched"}}),
-    # $set to null ≡ unset (slow path, the JVM-parse-divergent case)
+    # $set to null ≡ unset (slow path)
     json.dumps({"conv_id": "c1", "turn_idx": 1, "$set": {"role": None}}),
     # $unset + $inc (slow path)
     '{"conv_id": "c3", "turn_idx": 4, "$unset": {"role": ""}, "$inc": {"score": -2}}',
@@ -42,7 +43,65 @@ PARSE_DOCS = [
     "",
     None,
     "{}",
+    # hostile shapes: bare NaN / Infinity (orjson rejects, stdlib reads),
+    # an escaped "$set" key, $set to null, an extended-JSON key, escapes
+    '{"conv_id": "h_nan", "turn_idx": 0, "role": "user", "text": "bare nan", '
+    '"score": NaN}',
+    '{"conv_id": "h_inf", "turn_idx": 0, "role": "user", "text": "bare infinity", '
+    '"score": Infinity}',
+    '{"conv_id": "r_esc", "turn_idx": 0, "\\u0024set": {"text": "escaped set"}}',
+    '{"conv_id": "r_null", "turn_idx": 0, "$set": {"text": null}}',
+    '{"conv_id": "h_long", "turn_idx": {"$numberLong": "7"}, "role": "assistant", '
+    '"text": "extended json key"}',
+    '{"conv_id": "h_uni", "turn_idx": 0, "role": "user", '
+    '"text": "caf\\u00e9 \\ud83d\\ude00 \\u4e2d\\u6587 \\"q\\""}',
+    # poison docs: not an object (the row reads empty) ...
+    "null",
+    "42",
+    "[1]",
+    '"x"',
+    "[" * 100_000 + "]" * 100_000,  # past both decoders' nesting limits
+    # ... and fields of a JSON type their column cannot hold (NULL there)
+    '{"conv_id": "p1", "turn_idx": 1, "text": 5}',
+    '{"conv_id": "p2", "turn_idx": "x", "text": "t"}',
+    '{"conv_id": "p3", "turn_idx": 1.5, "text": "t"}',
+    '{"conv_id": "p4", "turn_idx": 4, "score": "hi"}',
+    '{"conv_id": "p5", "turn_idx": {"$numberLong": "abc"}}',
+    '{"conv_id": "p6", "turn_idx": 6, "$set": 5}',
+    # a lone surrogate: orjson rejects it, stdlib reads it, UTF-8 cannot
+    # hold it
+    '{"conv_id": "p7", "turn_idx": 7, "text": "\\ud800"}',
+    # an integer past int64 in a double column, on both decoders
+    '{"conv_id": "p8", "turn_idx": 8, "score": 123456789012345678901234567890}',
+    '{"conv_id": "p9", "turn_idx": 9, "$set": {"score": 123456789012345678901234567890}}',
 ]
+
+#: the column type each payload field must fit; a value whose JSON type
+#: misfits reads as NULL
+_COL_TYPES = {"conv_id": str, "turn_idx": int, "role": str, "text": str,
+              "tool": str, "score": float}
+
+
+def _utf8(v: str) -> bool:
+    try:
+        v.encode("utf-8")
+        return True
+    except UnicodeEncodeError:
+        return False
+
+
+def _typed(v, typ):
+    if typ is str:
+        return v if type(v) is str and _utf8(v) else None
+    if typ is int:
+        return v if type(v) is int and -2**31 <= v < 2**31 else None
+    return float(v) if type(v) in (int, float) else None
+
+
+def _same(a, b) -> bool:
+    if isinstance(a, float) and isinstance(b, float):
+        return a == b or (math.isnan(a) and math.isnan(b))
+    return a == b
 
 
 def _legacy_parse(docs, with_tool=True):
@@ -58,8 +117,9 @@ def _legacy_parse(docs, with_tool=True):
 
 def test_parse_udf_matches_legacy_row_semantics(spark):
     """The tiered UDF (C-JSON fast path + exact slow path) must produce
-    the same rows the row-at-a-time reference implementation does, for
-    every contract shape including the '"$'-in-payload false positive."""
+    the same rows the row-at-a-time stdlib reading does, for every contract
+    shape including the '"$'-in-payload false positive, the hostile shapes
+    and the poison docs (none of which may fail the batch)."""
     from py_mongo_sync_spark.functions.parse import parsed_events
 
     rows = [(i, i, "u", "chat.transcripts", s)
@@ -71,8 +131,9 @@ def test_parse_udf_matches_legacy_row_semantics(spark):
     exp = _legacy_parse(PARSE_DOCS)
     for i, e in enumerate(exp):
         g = got[i]
-        for c in ("conv_id", "turn_idx", "role", "text", "tool", "score"):
-            assert g[c] == e[c], f"doc {i} col {c}: {g[c]!r} != {e[c]!r}"
+        for c, typ in _COL_TYPES.items():
+            want = _typed(e[c], typ)
+            assert _same(g[c], want), f"doc {i} col {c}: {g[c]!r} != {want!r}"
         assert g["is_patch"] == e["is_patch"], f"doc {i} is_patch"
         assert (g["unset_cols"] or None) == (e["unset_cols"] or None), f"doc {i} unset"
         assert (g["inc_map"] or None) == (e["inc_map"] or None), f"doc {i} inc"
@@ -137,7 +198,7 @@ def test_cow_merge_plans_shuffled_hash_join(spark, tmp_path):
             "conv_id string, turn_idx int, role string, text string, "
             "ts long, _op string, _is_patch boolean",
         )
-        t.merge(src, batch_id=0, changed_buckets=None)
+        t.merge(src, batch_id=0)
     finally:
         LakeTable._write_buckets = orig
     assert "ShuffledHashJoin" in captured["plan"], captured["plan"][:2000]

@@ -244,9 +244,8 @@ def test_strict_ops_enforced_on_big_batch_probe_skip_path(spark, tmp_path):
     pipe = _mk_pipe(spark, tmp_path, n_buckets=2)
     pipe.cfg.probe_skip_factor = 5   # big-batch threshold: 2*5 = 10 events
     pipe.cfg.strict_ops = True
-    # no evolution candidates → `cand or not big` really takes the skip path
+    # no column the table lacks → the MERGE really takes the all-buckets path
     pipe.cfg.include_fields = frozenset({"role", "text"})
-    assert pipe._evolution_candidates() == []
     ev = [
         (10 + i, "i", "chat.transcripts",
          json.dumps({"conv_id": f"c{i}", "turn_idx": 0, "role": "user",
@@ -267,17 +266,27 @@ def test_strict_ops_enforced_on_big_batch_probe_skip_path(spark, tmp_path):
     assert not res["skipped"]
 
 
-def test_strict_ops_unmeasured_probe_refuses(spark, tmp_path):
-    """Defense-in-depth: a probe that reaches the gate with an unmeasured
-    (None) count under strict_ops must refuse, not silently pass."""
+def test_small_batch_lineage_counts_ddl_events(spark, tmp_path):
+    """A batch below the all-buckets threshold counts every i/u/d/c event
+    in its one lineage row, its add_column command included."""
     pipe = _mk_pipe(spark, tmp_path)
-    pipe.cfg.strict_ops = True
-    probe = {"n_unsupported_ops": None, "min_ts": None, "commands": [],
-             "buckets": [], "nonnull_new": [], "bucket_stats": [],
-             "n_events": 0}
-    with pytest.raises(RuntimeError, match="not.*measured|unmeasured"):
-        pipe._finish_batch(pipe._fold(pipe.transform(
-            _events_df(spark, []))), probe, 0, 0.0)
+    ev = [
+        (10, "c", "chat.transcripts",
+         json.dumps({"cmd": "add_column", "name": "tool", "type": "string"})),
+        (11, "i", "chat.transcripts",
+         json.dumps({"conv_id": "c2", "turn_idx": 0, "role": "user",
+                     "text": "new", "tool": "calc"})),
+        (12, "u", "chat.transcripts",
+         json.dumps({"conv_id": "c0", "turn_idx": 0, "$set": {"text": "p"}})),
+        (13, "d", "chat.transcripts", json.dumps({"conv_id": "c1", "turn_idx": 0})),
+        (14, "n", "chat.transcripts", "{}"),
+    ]
+    assert len(ev) < pipe.cfg.n_buckets * pipe.cfg.probe_skip_factor
+    res = pipe.apply_batch(_events_df(spark, ev), 0)
+    rows = pipe.cplog.read().collect()
+    assert [(r["batch_id"], r["n_events"], r["max_ts"]) for r in rows] == [(0, 4, 13)]
+    assert res["n_events"] == 4
+    assert "tool" in pipe.table.manifest()["columns"]
 
 
 def test_mixed_ops_batch_matches_sequential_oracle(spark, tmp_path):
@@ -338,33 +347,6 @@ def test_probe_bucket_matches_long_key_schema(spark, tmp_path):
     got = {(r["conv_id"], r["turn_idx"]): r["text"] for r in pipe.table.read().collect()}
     assert got[("c0", 1)] == "keep-me"
     assert len(got) == 5
-
-
-def test_merge_hint_violation_falls_back_not_loses(spark, tmp_path):
-    """A wrong changed-bucket hint must never clobber a bucket: the MERGE
-    detects the stray write and retries hint-free."""
-    from py_mongo_sync_spark.plans.lake import LakeTable
-
-    t = LakeTable(spark, str(tmp_path / "lake"))
-    base = spark.createDataFrame(
-        [("a", 0, "x", 1), ("b", 1, "y", 1), ("c", 2, "z", 1)],
-        "conv_id string, turn_idx int, text string, ts long",
-    )
-    t.create_or_replace(base, key_cols=["conv_id", "turn_idx"], ts_col="ts", n_buckets=4)
-    src = spark.createDataFrame(
-        [("a", 0, "x2", 2, "u", False)],
-        "conv_id string, turn_idx int, text string, ts long, _op string, _is_patch boolean",
-    )
-    from py_mongo_sync_spark.plans.lake import BUCKET_COL, bucket_expr
-
-    true_bucket = (
-        src.select(bucket_expr(["conv_id", "turn_idx"], 4).alias("b")).first()["b"]
-    )
-    wrong = [(true_bucket + 1) % 4]
-    res = t.merge(src, batch_id=0, changed_buckets=wrong)
-    assert not res.get("skipped")
-    got = {(r["conv_id"], r["turn_idx"]): r["text"] for r in t.read().collect()}
-    assert got == {("a", 0): "x2", ("b", 1): "y", ("c", 2): "z"}
 
 
 def test_manifest_batch_bookkeeping_is_constant_size(spark, tmp_path):

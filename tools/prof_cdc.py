@@ -6,7 +6,7 @@ timings from CdcPipeline.last_stats (t_pstats = envelope stats scan,
 t_probe/t_join_write from the lake MERGE) so the ~40 s wall is
 attributable operator by operator.
 
-Usage: PYTHONPATH=/root/repo python tools/prof_cdc.py [cow|mor] [pandas|jvm]
+Usage (from the repo root): PYTHONPATH=. python tools/prof_cdc.py [cow|mor]
 """
 
 from __future__ import annotations
@@ -17,19 +17,16 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # frozen; import only — main() never runs
 
 
 def main():
     write_mode = sys.argv[1] if len(sys.argv) > 1 else "cow"
-    parse_mode = sys.argv[2] if len(sys.argv) > 2 else "pandas"
     data_dir = os.environ.get("PROF_CDC_DATA")
-    own = False
     if not data_dir:
         data_dir = tempfile.mkdtemp(prefix="prof_cdc_data_")
-        own = True
         spark = bench._spark(bench.CPUS)
         bench.materialize_events(spark, data_dir)
         spark.stop()
@@ -45,7 +42,7 @@ def main():
     cfg = SyncConfig(
         dst_path=os.path.join(work, "lake"),
         checkpoint_path=os.path.join(work, "cplog"),
-        n_buckets=64, write_mode=write_mode, parse_mode=parse_mode,
+        n_buckets=64, write_mode=write_mode,
     )
     pipe = CdcPipeline(spark, cfg)
     snap = spark.read.parquet(os.path.join(data_dir, "snapshot"))
@@ -62,7 +59,7 @@ def main():
     t_apply = time.monotonic() - t1
     n_rows = pipe.table.read().count()
     print(json.dumps({
-        "write_mode": write_mode, "parse_mode": parse_mode,
+        "write_mode": write_mode,
         "snapshot_sec": round(t_snap, 2), "apply_sec": round(t_apply, 2),
         "events_per_sec": round(bench.N_EVENTS / t_apply, 1),
         "final_rows": n_rows,
@@ -76,8 +73,6 @@ def main():
     spark.stop()
     import shutil
     shutil.rmtree(work, ignore_errors=True)
-    if own and not os.environ.get("PROF_CDC_KEEP"):
-        pass  # keep data for reuse; cleaned by /tmp lifecycle
 
 
 if __name__ == "__main__":
