@@ -58,10 +58,12 @@ _MISFIT = (pa.ArrowException, TypeError, ValueError, OverflowError)
 def _convert(vals: list, typ: pa.DataType) -> pa.Array:
     if pa.types.is_integer(typ):
         # a typed conversion truncates 1.5 to 1 without a word: infer, then
-        # cast (safe: overflow raises)
+        # cast (safe: an integral double such as 3.0 fits; truncation,
+        # NaN and overflow raise)
         arr = pa.array(vals)
-        if not (pa.types.is_integer(arr.type) or pa.types.is_null(arr.type)):
-            raise TypeError(f"{arr.type} values in an {typ} column")
+        t = arr.type
+        if not (pa.types.is_integer(t) or pa.types.is_floating(t) or pa.types.is_null(t)):
+            raise TypeError(f"{t} values in an {typ} column")
         return arr.cast(typ)
     return pa.array(vals, type=typ)
 

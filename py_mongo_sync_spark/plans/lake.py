@@ -472,7 +472,7 @@ class LakeTable:
 
     def merge(
         self,
-        source: DataFrame,
+        source: DataFrame | None,
         batch_id: int,
         all_buckets: bool = False,
         compact_threshold: int | None = None,
@@ -490,7 +490,8 @@ class LakeTable:
         expensive source lineage executes in exactly ONE job — the
         join+write — with no persist round-trip. It is honoured only when
         the source carries no column the table lacks, since schema
-        evolution needs the probe.
+        evolution needs the probe. ``source=None`` (a batch with no data
+        events) commits the batch id without running a Spark job.
 
         Optimistic-concurrency retry (the Iceberg commit loop): a
         ``CommitConflict`` — a concurrent writer won the version claim, or
@@ -523,13 +524,15 @@ class LakeTable:
 
     def _merge_attempt(
         self,
-        source: DataFrame,
+        source: DataFrame | None,
         batch_id: int,
         m: dict,
         all_buckets: bool,
         compact_threshold: int | None,
     ) -> dict:
         """One optimistic MERGE attempt against manifest snapshot ``m``."""
+        if source is None:
+            return self._commit_empty(m, batch_id)
         if m.get("write_mode", "cow") == "mor":
             def inner(src, bid, mf, changed):
                 return self._merge_mor(src, bid, mf, changed, compact_threshold)

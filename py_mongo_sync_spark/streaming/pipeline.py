@@ -371,9 +371,13 @@ class CdcPipeline:
         if stats["commands"]:
             ddl_stats = self._apply_commands(stats["commands"])
 
-        # envelope optime → the table's row timestamp
-        source = folded.withColumn(
-            "ts", F.timestamp_seconds(F.lit(FIXTURE_EPOCH) + F.col("ts"))
+        # envelope optime → the table's row timestamp. A batch with no data
+        # events has an empty fold, so the MERGE only records its id; a DDL
+        # command keeps the fold (a rename widens the namespaces it accepts).
+        source = None if stats["n_data"] == 0 and not stats["commands"] else (
+            folded.withColumn(
+                "ts", F.timestamp_seconds(F.lit(FIXTURE_EPOCH) + F.col("ts"))
+            )
         )
 
         # (f) MERGE. Below n_buckets × probe_skip_factor data events the

@@ -218,3 +218,39 @@ def test_multi_ns_rename_reroutes_without_restart(spark, tmp_path):
     notes = {r["conv_id"] for r in
              multi.pipes["notes.transcripts"].table.read().collect()}
     assert {"notes-0", "notes-1"} <= notes and "post-rename" not in notes
+
+
+def test_multi_ns_namespace_without_events_commits_without_merge(spark, tmp_path):
+    """A namespace with no events in the batch records the batch id with
+    no MERGE work: its table never reaches the MERGE's source preparation
+    (the bucket probe), while its sibling merges normally."""
+    import json as _json
+
+    cfg = SyncConfig(
+        dst_path=str(tmp_path / "lakes"), checkpoint_path=str(tmp_path / "cps"),
+        n_buckets=4,
+    )
+    snap = gen_transcripts_snapshot(spark, 4, 2)
+    ns_list = ["chat.transcripts", "notes.transcripts"]
+    multi = MultiCdcPipeline(spark, cfg, ns_list)
+    multi.initial_sync({ns: snap for ns in ns_list})
+    prepared = []
+    for ns, p in multi.pipes.items():
+        prep = p.table._prep_source
+
+        def spy(source, m, changed, ns=ns, prep=prep):
+            prepared.append(ns)
+            return prep(source, m, changed)
+
+        p.table._prep_source = spy
+    before = multi.pipes["notes.transcripts"].table.read().count()
+    res = multi.apply_batch(spark.createDataFrame([
+        (2000, "i", "chat.transcripts",
+         _json.dumps({"conv_id": "new", "turn_idx": 0, "role": "user", "text": "x"})),
+    ], "ts long, op string, ns string, doc string"), 0)
+    assert prepared == ["chat.transcripts"]
+    assert res["notes.transcripts"]["changed_buckets"] == 0
+    notes = multi.pipes["notes.transcripts"].table
+    assert notes.is_committed(0)
+    assert notes.read().count() == before
+    assert "new" in {r["conv_id"] for r in multi.pipes["chat.transcripts"].table.read().collect()}

@@ -74,6 +74,13 @@ PARSE_DOCS = [
     # an integer past int64 in a double column, on both decoders
     '{"conv_id": "p8", "turn_idx": 8, "score": 123456789012345678901234567890}',
     '{"conv_id": "p9", "turn_idx": 9, "$set": {"score": 123456789012345678901234567890}}',
+    # an integral double in the int key column is that integer (the Mongo
+    # shell stores numbers as doubles; relaxed extended JSON writes 3.0),
+    # on both decoders
+    '{"conv_id": "p10", "turn_idx": 3.0, "text": "t"}',
+    '{"conv_id": "p11", "turn_idx": {"$numberDouble": "3"}, "text": "t"}',
+    '{"conv_id": "p12", "turn_idx": 1e20, "text": "t"}',
+    '{"conv_id": "p13", "turn_idx": NaN, "text": "t"}',
 ]
 
 #: the column type each payload field must fit; a value whose JSON type
@@ -94,6 +101,8 @@ def _typed(v, typ):
     if typ is str:
         return v if type(v) is str and _utf8(v) else None
     if typ is int:
+        if type(v) is float and v.is_integer():
+            v = int(v)
         return v if type(v) is int and -2**31 <= v < 2**31 else None
     return float(v) if type(v) in (int, float) else None
 

@@ -260,10 +260,22 @@ def test_strict_ops_enforced_on_big_batch_probe_skip_path(spark, tmp_path):
         pipe.apply_batch(_events_df(spark, ev), 0)
     assert pipe.table.latest_version() == before  # nothing applied
 
-    # and the same big batch WITHOUT strict mode applies cleanly (no gate)
+    # and the same big batch WITHOUT strict mode applies cleanly (no gate),
+    # rewriting every bucket without the MERGE's own bucket probe (a probe
+    # shows as changed=None here)
+    seen = []
+    prep = pipe.table._prep_source
+
+    def spy(source, m, changed):
+        seen.append(changed)
+        return prep(source, m, changed)
+
+    pipe.table._prep_source = spy
     pipe.cfg.strict_ops = False
     res = pipe.apply_batch(_events_df(spark, ev), 1)
     assert not res["skipped"]
+    assert seen == [[0, 1]]
+    assert res["changed_buckets"] == 2
 
 
 def test_small_batch_lineage_counts_ddl_events(spark, tmp_path):
