@@ -26,9 +26,10 @@ from __future__ import annotations
 import json
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 
+from py_mongo_sync_spark.exprcache import per_context
 from py_mongo_sync_spark.schema import payload_parse_schema
 
 _BSON_SCALARS = ("$numberLong", "$numberInt", "$numberDouble")
@@ -194,8 +195,15 @@ def parsed_events(df: DataFrame, with_tool: bool = True) -> DataFrame:
     """Envelope + decoded payload: adds payload columns, ``is_patch``,
     ``unset_cols`` and ``inc_map``. The optional envelope ``seq`` column
     (oplog increment, the equal-ts tiebreak) passes through."""
-    udf = make_parse_udf(with_tool)
-    extra = ["seq"] if "seq" in df.columns else []
-    return df.withColumn("_p", udf(F.col("doc"))).select(
-        "ts", *extra, "op", "ns", "_p.*"
+    parse, cols = _parse_plan(with_tool, "seq" in df.columns)
+    return df.withColumn("_p", parse).select(*cols)
+
+
+@per_context
+def _parse_plan(with_tool: bool, has_seq: bool) -> tuple[Column, tuple[Column, ...]]:
+    """The parse UDF applied to ``doc``, and the output projection — one
+    UDF per SparkContext, reused by every batch."""
+    extra = ["seq"] if has_seq else []
+    return make_parse_udf(with_tool)(F.col("doc")), tuple(
+        F.col(c) for c in ["ts", *extra, "op", "ns", "_p.*"]
     )

@@ -9,9 +9,10 @@ paths resolving into struct columns.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from py_mongo_sync_spark.config import SyncConfig
+from py_mongo_sync_spark.exprcache import per_context
 
 
 def project_fields(
@@ -23,18 +24,26 @@ def project_fields(
     es/syncer.py:80-84)."""
     if not cfg.include_fields:
         return df
-    keep = list(always_keep or [])
+    return df.select(*_projection(
+        frozenset(cfg.include_fields), tuple(always_keep or ()), tuple(df.columns)
+    ))
+
+
+@per_context
+def _projection(
+    include_fields: frozenset[str], keep: tuple[str, ...], columns: tuple[str, ...]
+) -> tuple[Column, ...]:
     cols = [F.col(c) for c in keep]
-    for path in sorted(cfg.include_fields):
+    for path in sorted(include_fields):
         if path in keep:
             continue
         top = path.split(".", 1)[0]
-        if top not in df.columns:
+        if top not in columns:
             continue
         # dotted path into a struct → re-nest under the top-level name like
         # doc_flat_to_nested (doc_utils.py:4-21); flat column → as-is.
         cols.append(F.col(path).alias(path.replace(".", "_")) if "." in path else F.col(path))
-    return df.select(*cols)
+    return tuple(cols)
 
 
 def flat_to_nested(df: DataFrame, paths: list[str]) -> DataFrame:

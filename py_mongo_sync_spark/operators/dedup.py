@@ -45,7 +45,11 @@ optional ``seq`` column is the deterministic tiebreak.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W, functions as F, types as T
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, Window as W, functions as F, types as T
+
+from py_mongo_sync_spark.exprcache import per_context
 
 _BIG_RN = 1 << 31
 
@@ -98,9 +102,58 @@ def fold_net_events(
     patch-operator columns ``unset_col`` (array<string>) / ``inc_col``
     (map<string,double>). Output: one row per key with payload, ``ts``,
     ``_op`` ('d' or 'u'), ``_is_patch``, ``_unset_cols``, ``_inc_map``.
+
+    The expressions are built once per signature (``_fold_plan``); a call
+    costs only the DataFrame operations below.
     """
-    non_key_payload = [c for c in payload_cols if c not in key_cols]
     dtypes = dict(df.dtypes)
+    payload = tuple(
+        (c, dtypes.get(c, "string")) for c in payload_cols if c not in key_cols
+    )
+    p = _fold_plan(
+        tuple(key_cols), payload, ts_col, op_col, patch_col, seq_col, unset_col, inc_col
+    )
+    # pass 1 ranks each key's events and keeps the newest non-patch plus
+    # every patch above it (all rows if no base); passes 2-3 run on the
+    # same partitioning/sort, so the window exec nodes collapse onto the
+    # single shuffle of pass 1
+    return (
+        df.select(*p.events)
+        .withColumn("_rn", p.rn)
+        .withColumn("_base_rn", p.base_rn)
+        .where(p.kept)
+        .select(*p.anchored)
+        .select(*p.resolved)
+        .where(p.newest)
+        .select(*p.out)
+    )
+
+
+class _FoldPlan(NamedTuple):
+    events: tuple[Column, ...]
+    rn: Column
+    base_rn: Column
+    kept: Column
+    anchored: tuple[Column, ...]
+    resolved: tuple[Column, ...]
+    newest: Column
+    out: tuple[Column, ...]
+
+
+@per_context
+def _fold_plan(
+    key_cols: tuple[str, ...],
+    payload: tuple[tuple[str, str], ...],
+    ts_col: str,
+    op_col: str,
+    patch_col: str,
+    seq_col: str | None,
+    unset_col: str | None,
+    inc_col: str | None,
+) -> _FoldPlan:
+    """The fold's expressions for one signature: key columns, non-key
+    payload ``(name, type)`` pairs and the envelope/meta column names."""
+    cols = [c for c, _t in payload]
     is_patch = F.coalesce(F.col(patch_col), F.lit(False))
     order = [F.col(ts_col).desc()] + ([F.col(seq_col).desc()] if seq_col else [])
     w = W.partitionBy(*key_cols).orderBy(*order)
@@ -121,30 +174,23 @@ def fold_net_events(
             return F.element_at(F.col(inc_col), F.lit(c))
         return F.lit(None).cast("double")
 
-    sel = [
-        *key_cols,
+    events = (
+        *[F.col(c) for c in key_cols],
         F.col(ts_col),
         F.col(op_col).alias("_ev_op"),
         is_patch.alias("_ev_patch"),
-        *[F.col(c) for c in non_key_payload],
+        *[F.col(c) for c in cols],
         *([F.col(seq_col)] if seq_col else []),
-        *[ev_unset(c).alias(f"_un_{c}") for c in non_key_payload],
-        *[ev_inc(c).alias(f"_in_{c}") for c in non_key_payload],
-    ]
-
-    ranked = df.select(*sel).withColumn("_rn", F.row_number().over(w)).withColumn(
-        "_base_rn",
-        F.min(F.when(~F.col("_ev_patch"), F.col("_rn"))).over(wkey),
+        *[ev_unset(c).alias(f"_un_{c}") for c in cols],
+        *[ev_inc(c).alias(f"_in_{c}") for c in cols],
     )
-    # keep the newest non-patch and every patch above it (all rows if no base)
-    kept = ranked.where(
-        F.col("_base_rn").isNull() | (F.col("_rn") <= F.col("_base_rn"))
-    )
+    rn = F.row_number().over(w)
+    base_rn = F.min(F.when(~F.col("_ev_patch"), F.col("_rn"))).over(wkey)
+    kept = F.col("_base_rn").isNull() | (F.col("_rn") <= F.col("_base_rn"))
 
-    # pass 2: per-column anchor position (same partitioning/sort — the
-    # window exec nodes collapse onto the single shuffle of pass 1)
-    anchored = kept.select(
-        "*",
+    # pass 2: per-column anchor position
+    anchored = (
+        F.col("*"),
         *[
             F.min(
                 F.when(
@@ -154,7 +200,7 @@ def fold_net_events(
             )
             .over(wkey)
             .alias(f"_arn_{c}")
-            for c in non_key_payload
+            for c in cols
         ],
     )
 
@@ -175,20 +221,19 @@ def fold_net_events(
             )
         ).over(wkey)
 
-    resolved = anchored.select(
-        *key_cols,
+    resolved = (
+        *[F.col(c) for c in key_cols],
         F.col(ts_col),
         F.col("_rn"),
         F.col("_base_rn"),
         base_is_del.alias("_bdel"),
         base_ts.alias("_bts"),
-        *[anchor_val(c).alias(f"_av_{c}") for c in non_key_payload],
-        *[inc_sum(c).alias(f"_is_{c}") for c in non_key_payload],
-        *[F.col(f"_arn_{c}") for c in non_key_payload],
+        *[anchor_val(c).alias(f"_av_{c}") for c in cols],
+        *[inc_sum(c).alias(f"_is_{c}") for c in cols],
+        *[F.col(f"_arn_{c}") for c in cols],
     )
 
-    def out_val(c: str):
-        typ = dtypes.get(c, "string")
+    def out_val(c: str, typ: str):
         av, isum = F.col(f"_av_{c}"), F.col(f"_is_{c}")
         anchored_c = F.col(f"_arn_{c}").isNotNull()
         with_inc = (F.coalesce(av.cast("double"), F.lit(0.0)) + isum).cast(typ)
@@ -212,12 +257,12 @@ def fold_net_events(
             F.when(unset_flag(c), F.array(F.lit(c))).otherwise(
                 F.array().cast("array<string>")
             )
-            for c in non_key_payload
+            for c in cols
         ]
-    ) if non_key_payload else F.array().cast("array<string>")
+    ) if cols else F.array().cast("array<string>")
     residual = [
         (c, F.when(F.col("_base_rn").isNull() & F.col(f"_arn_{c}").isNull(), F.col(f"_is_{c}")))
-        for c in non_key_payload
+        for c in cols
     ]
     out_inc = (
         F.map_filter(
@@ -234,20 +279,16 @@ def fold_net_events(
     )
 
     out = (
-        resolved.select(
-            *key_cols,
-            *[out_val(c) for c in non_key_payload],
-            F.when(F.col("_bdel"), F.col("_bts")).otherwise(F.col(ts_col)).alias(ts_col),
-            F.when(F.col("_bdel"), F.lit("d")).otherwise(F.lit("u")).alias("_op"),
-            F.col("_base_rn").isNull().alias("_is_patch"),
-            out_unset.alias("_unset_cols"),
-            out_inc.alias("_inc_map"),
-            F.col("_rn"),
-        )
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
+        *[F.col(c) for c in key_cols],
+        *[out_val(c, typ) for c, typ in payload],
+        F.when(F.col("_bdel"), F.col("_bts")).otherwise(F.col(ts_col)).alias(ts_col),
+        F.when(F.col("_bdel"), F.lit("d")).otherwise(F.lit("u")).alias("_op"),
+        F.col("_base_rn").isNull().alias("_is_patch"),
+        out_unset.alias("_unset_cols"),
+        out_inc.alias("_inc_map"),
     )
-    return out
+    return _FoldPlan(events, rn, base_rn, kept, anchored, resolved,
+                     F.col("_rn") == 1, out)
 
 
 def fold_net_events_salted(

@@ -143,11 +143,25 @@ class CheckpointLog:
 
     def high_watermark(self) -> int | None:
         """Resume point: max applied ts across all committed batches
-        (reference: OptimeLogger.read, optime_logger.py:31-40)."""
+        (reference: OptimeLogger.read, optime_logger.py:31-40). Read on
+        the driver with pyarrow, no Spark job: the log is a few small
+        files, and a max is unchanged by the duplicate rows ``read()``
+        drops. Only committed ``*.parquet`` files count, never an
+        in-flight ``.tmp``."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
         if not self.exists():
             return None
-        row = self.read().agg({"max_ts": "max"}).first()
-        return None if row[0] is None else int(row[0])
+        files = sorted(
+            os.path.join(self.path, f) for f in os.listdir(self.path)
+            if f.endswith(".parquet")
+        )
+        maxes = [
+            pc.max(pq.read_table(f, columns=["max_ts"])["max_ts"]).as_py()
+            for f in files
+        ]
+        return max((m for m in maxes if m is not None), default=None)
 
     def replication_lag_seconds(
         self, now: float | None = None, ts_base: int = 0
@@ -167,13 +181,22 @@ class CheckpointLog:
 
         return max(0.0, (now if now is not None else _time.time()) - (ts_base + wm))
 
-    def assert_not_stale(self, first_event_ts: int) -> None:
+    def assert_not_stale(
+        self, first_event_ts: int, delivered_ts: int | None = None
+    ) -> None:
         """Abort if the stream's history no longer covers the resume point —
         port of the first-event staleness check
         (/root/reference/mongosync/mongo/syncer.py:277-284: if the first
         tailed oplog entry isn't the one we checkpointed, the oplog rolled
-        over and silent data loss would follow)."""
-        wm = self.high_watermark()
+        over and silent data loss would follow).
+
+        The resume point is the larger of the lineage watermark and
+        ``delivered_ts``, the last optime the table committed of ANY
+        delivered event: the lineage counts only i/u/d/c events of the
+        table's namespaces, so a no-op or a filtered namespace's event at
+        the restart edge would otherwise read as a gap."""
+        marks = [t for t in (self.high_watermark(), delivered_ts) if t is not None]
+        wm = max(marks, default=None)
         if wm is not None and first_event_ts > wm + 1:
             raise RuntimeError(
                 f"checkpoint is stale: resume watermark {wm} but stream "

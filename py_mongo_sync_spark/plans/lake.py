@@ -53,8 +53,11 @@ import os
 import time
 import uuid
 import warnings
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F, types as T
+
+from py_mongo_sync_spark.exprcache import per_context
 
 BUCKET_COL = "_bucket"
 DELETED_COL = "_deleted"
@@ -89,6 +92,11 @@ def bucket_expr(key_cols: list[str], n_buckets: int):
     disjoint set of buckets, so the bucket-partitioned write needs NO extra
     shuffle (correctness never depends on this — ``partitionBy`` splits by
     value — it only bounds file counts and saves a full-table shuffle)."""
+    return _bucket_expr(tuple(key_cols), n_buckets)
+
+
+@per_context
+def _bucket_expr(key_cols: tuple[str, ...], n_buckets: int) -> Column:
     return F.pmod(F.hash(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
 
 
@@ -102,6 +110,263 @@ def manifest_bucket_cols(m: dict) -> list[str]:
     — co-location with the join key is a performance property, never a
     correctness one (bucket_expr docstring)."""
     return m.get("bucket_cols") or m["key_cols"]
+
+
+# -- plan expressions, built once per signature (exprcache module doc) --
+
+@per_context
+def _live() -> Column:
+    return ~F.coalesce(F.col(DELETED_COL), F.lit(False))
+
+
+def _opt_meta(has_unset: bool, has_inc: bool) -> list[Column]:
+    return ([F.col(_UNSET)] if has_unset else []) + ([F.col(_INC)] if has_inc else [])
+
+
+class _PrepHead(NamedTuple):
+    cols: tuple[Column, ...]
+    bucket: Column
+    new_cols: tuple[str, ...]
+    has_unset: bool
+    has_inc: bool
+    probe: tuple[Column, ...]
+
+
+@per_context
+def _prep_head(
+    table_json: str, source_json: str, bucket_cols: tuple[str, ...], n_buckets: int
+) -> _PrepHead:
+    """MERGE source → table types (columns the table lacks pass through as
+    evolution candidates); its bucket, hashed from the CAST keys (a long
+    and an int key hash to different buckets); and the probe's per-bucket
+    aggregates, one "carried" flag per candidate."""
+    schema = T.StructType.fromJson(json.loads(table_json))
+    src_cols = T.StructType.fromJson(json.loads(source_json)).fieldNames()
+    table_cols = schema.fieldNames()
+    new_cols = tuple(
+        c for c in src_cols
+        if c not in table_cols and c not in MERGE_META_COLS and c != BUCKET_COL
+    )
+    has_unset, has_inc = _UNSET in src_cols, _INC in src_cols
+    cols = (
+        *[F.col(c).cast(schema[c].dataType) for c in table_cols if c in src_cols],
+        *[F.col(c) for c in new_cols],
+        F.col(_OP),
+        F.col(_PATCH),
+        *_opt_meta(has_unset, has_inc),
+    )
+
+    # a new column counts as "carried" when the batch has a value OR a
+    # residual $inc for it (an increment on a not-yet-existing column must
+    # still evolve the schema)
+    def carried(c: str) -> Column:
+        nonnull = F.col(c).isNotNull()
+        if has_inc:
+            nonnull = nonnull | F.element_at(F.col(_INC), F.lit(c)).isNotNull()
+        return nonnull
+
+    probe = (
+        F.count(F.lit(1)).alias("_n"),
+        *[F.max(carried(c)).alias(c) for c in new_cols],
+    )
+    return _PrepHead(
+        cols, bucket_expr(bucket_cols, n_buckets), new_cols, has_unset, has_inc, probe
+    )
+
+
+class _PrepTail(NamedTuple):
+    schema: T.StructType
+    cols: tuple[Column, ...]
+
+
+@per_context
+def _prep_tail(table_json: str, source_json: str, evolved: tuple[str, ...]) -> _PrepTail:
+    """The table schema after ``evolved`` columns merge in, and the MERGE
+    source projected onto it (a table column the batch lacks reads NULL)."""
+    schema = T.StructType.fromJson(json.loads(table_json))
+    source = T.StructType.fromJson(json.loads(source_json))
+    for c in evolved:
+        schema = schema.add(T.StructField(c, source[c].dataType, True))
+    src_cols = source.fieldNames()
+    cols = (
+        *[
+            F.col(c).cast(f.dataType) if c in src_cols
+            else F.lit(None).cast(f.dataType).alias(c)
+            for c, f in zip(schema.fieldNames(), schema.fields)
+        ],
+        F.col(_OP),
+        F.col(_PATCH),
+        *_opt_meta(_UNSET in src_cols, _INC in src_cols),
+        F.col(BUCKET_COL),
+    )
+    return _PrepTail(schema, cols)
+
+
+class _CowPlan(NamedTuple):
+    target: tuple[Column, ...]
+    on: Column
+    keep: Column
+    out: tuple[Column, ...]
+
+
+@per_context
+def _cow_plan(
+    schema_json: str,
+    tgt_cols: tuple[str, ...],
+    key_cols: tuple[str, ...],
+    ts_col: str,
+    bucket_cols: tuple[str, ...],
+    n_buckets: int,
+    has_unset: bool,
+    has_inc: bool,
+) -> _CowPlan:
+    """The copy-on-write MERGE for one signature: the target projection
+    (bucket, NULL backfill of freshly evolved columns), the join condition
+    between target ``t`` and source ``s``, and the merged row."""
+    schema = T.StructType.fromJson(json.loads(schema_json))
+    table_cols = schema.fieldNames()
+    target = (
+        *[F.col(c) for c in tgt_cols],
+        # target predates freshly-evolved columns → NULL-backfill them
+        *[F.lit(None).cast(schema[c].dataType).alias(c)
+          for c in table_cols if c not in tgt_cols],
+        bucket_expr(bucket_cols, n_buckets).alias(BUCKET_COL),
+    )
+    # plain equality (keys are non-null by construction): `<=>` would
+    # wrap the keys and break reuse of the fold's hash partitioning AND
+    # the bucket-aligned write (verified: eqNullSafe doubled the files
+    # per bucket).
+    on = F.col(f"t.{key_cols[0]}") == F.col(f"s.{key_cols[0]}")
+    for c in key_cols[1:]:
+        on = on & (F.col(f"t.{c}") == F.col(f"s.{c}"))
+
+    s_key = F.col(f"s.{key_cols[0]}")
+    t_key = F.col(f"t.{key_cols[0]}")
+    matched = s_key.isNotNull() & t_key.isNotNull()
+    src_only = s_key.isNotNull() & t_key.isNull()
+    # monotone-ts guard: stale replayed rows never beat newer target rows
+    # (reference: strictly-forward _last_optime, common_syncer.py:50).
+    src_wins = F.col(f"s.{ts_col}") >= F.col(f"t.{ts_col}")
+    is_del = F.col(f"s.{_OP}") == "d"
+    is_patch = F.col(f"s.{_PATCH}")
+    t_dead = F.coalesce(F.col(f"t.{DELETED_COL}"), F.lit(False))
+
+    # deletes become tombstones (never physically dropped here — see
+    # expire_versions/compact); a patch never resurrects a dead key
+    # (UpdateOne without upsert); a replace does (ReplaceOne upsert=True).
+    applies = matched & src_wins & (~is_patch | ~t_dead)
+    keep = t_key.isNotNull() | (src_only & ~is_patch)
+
+    deleted_out = (
+        F.when(applies & is_del, F.lit(True))
+        .when(applies & ~is_patch, F.lit(False))
+        .when(src_only & is_del, F.lit(True))
+        .when(src_only, F.lit(False))
+        .otherwise(t_dead)
+    ).alias(DELETED_COL)
+
+    def patch_val(c: str):
+        """Three-valued per-column patch resolution (replaces bare
+        coalesce): $unset/$set-null → NULL; residual $inc → target
+        value + delta (NULL counts 0, Mongo's inc-on-missing rule);
+        $set → source value; untouched → keep target."""
+        tc, sc = F.col(f"t.{c}"), F.col(f"s.{c}")
+        typ = schema[c].dataType
+        v = F.coalesce(sc, tc)
+        if has_inc:
+            delta = F.element_at(F.col(f"s.{_INC}"), F.lit(c))
+            v = F.when(
+                delta.isNotNull(),
+                (F.coalesce(tc.cast("double"), F.lit(0.0)) + delta).cast(typ),
+            ).otherwise(v)
+        if has_unset:
+            hit = F.coalesce(
+                F.array_contains(F.col(f"s.{_UNSET}"), F.lit(c)), F.lit(False)
+            )
+            v = F.when(hit, F.lit(None).cast(typ)).otherwise(v)
+        return v
+
+    def out_col(c: str):
+        tc, sc = F.col(f"t.{c}"), F.col(f"s.{c}")
+        return (
+            F.when(applies & is_patch, patch_val(c))
+            .when(applies & ~is_del, sc)
+            .when(applies & is_del, sc if c == ts_col else tc)
+            .when(src_only, sc)
+            .otherwise(tc)
+        ).alias(c)
+
+    out = (
+        *[out_col(c) for c in table_cols],
+        deleted_out,
+        F.coalesce(F.col(f"t.{BUCKET_COL}"), F.col(f"s.{BUCKET_COL}")).alias(BUCKET_COL),
+    )
+    return _CowPlan(target, on, keep, out)
+
+
+@per_context
+def _mor_delta_head(
+    table_cols: tuple[str, ...], has_unset: bool, has_inc: bool
+) -> tuple[Column, ...]:
+    """A MoR delta row without its batch sequence: the optional meta is
+    normalized so every delta file shares one physical schema (older files
+    read back NULL for later-evolved columns)."""
+    return (
+        *[F.col(c) for c in table_cols],
+        F.col(_OP),
+        F.col(_PATCH),
+        (F.col(_UNSET) if has_unset else F.lit(None).cast("array<string>")).alias(_UNSET),
+        (F.col(_INC) if has_inc else F.lit(None).cast("map<string,double>")).alias(_INC),
+        F.col(BUCKET_COL),
+    )
+
+
+class _MorReadPlan(NamedTuple):
+    delta_phys: T.StructType
+    deltas: tuple[Column, ...]
+    base: tuple[Column, ...]
+    payload: tuple[str, ...]
+    upserted: Column
+    out: tuple[Column, ...]
+
+
+@per_context
+def _mor_read_plan(
+    schema_json: str, key_cols: tuple[str, ...], ts_col: str
+) -> _MorReadPlan:
+    """Merge-on-read resolution (``LakeTable._resolve_deltas``): the delta
+    file schema and projection, base rows as events, and the resolved
+    row."""
+    schema = T.StructType.fromJson(json.loads(schema_json))
+    table_cols = schema.fieldNames()
+    meta = (_OP, _PATCH, _UNSET, _INC, _BSEQ)
+    delta_phys = T.StructType(
+        schema.fields
+        + [
+            T.StructField(_OP, T.StringType(), True),
+            T.StructField(_PATCH, T.BooleanType(), True),
+            T.StructField(_UNSET, T.ArrayType(T.StringType()), True),
+            T.StructField(_INC, T.MapType(T.StringType(), T.DoubleType()), True),
+            T.StructField(_BSEQ, T.LongType(), True),
+        ]
+    )
+    base = (
+        *[F.col(c) for c in table_cols],
+        F.when(F.coalesce(F.col(DELETED_COL), F.lit(False)), F.lit("d"))
+        .otherwise(F.lit("u")).alias(_OP),
+        F.lit(False).alias(_PATCH),
+        F.lit(None).cast("array<string>").alias(_UNSET),
+        F.lit(None).cast("map<string,double>").alias(_INC),
+        F.lit(-1).cast("long").alias(_BSEQ),
+    )
+    return _MorReadPlan(
+        delta_phys=delta_phys,
+        deltas=tuple(F.col(c) for c in (*table_cols, *meta)),
+        base=base,
+        payload=tuple(c for c in table_cols if c not in key_cols and c != ts_col),
+        upserted=~F.col("_is_patch"),
+        out=(*[F.col(c) for c in table_cols], (F.col("_op") == "d").alias(DELETED_COL)),
+    )
 
 
 class LakeTable:
@@ -197,8 +462,16 @@ class LakeTable:
             )
         return below
 
-    def _batch_fields(self, m: dict, batch_id: int) -> dict:
-        """Manifest fields recording ``batch_id`` as committed."""
+    def _batch_fields(
+        self, m: dict, batch_id: int, delivered_ts: int | None = None
+    ) -> dict:
+        """Manifest fields recording ``batch_id`` as committed, and the
+        largest source optime any committed batch delivered
+        (``max_delivered_ts``, no-ops and filtered namespaces included —
+        the resume staleness gate's floor; optimes are global to the
+        source, so it survives an epoch change)."""
+        seen = [t for t in (m.get("max_delivered_ts"), delivered_ts) if t is not None]
+        delivered = {"max_delivered_ts": max(seen)} if seen else {}
         if self.epoch is not None and m.get("epoch") != self.epoch:
             # first commit of a new stream instance: reset the window — the
             # old epoch's ids belong to a different batch-id sequence
@@ -206,6 +479,7 @@ class LakeTable:
                 "epoch": self.epoch,
                 "max_batch_id": batch_id,
                 "recent_batch_ids": [batch_id],
+                **delivered,
             }
         mx, recent = self._committed_state(m)
         recent = sorted(set(recent) | {batch_id})[-self._BATCH_WINDOW:]
@@ -214,6 +488,7 @@ class LakeTable:
             "epoch": self.epoch if self.epoch is not None else m.get("epoch"),
             "max_batch_id": new_max,
             "recent_batch_ids": recent,
+            **delivered,
         }
 
     def committed_batch_ids(self) -> set[int]:
@@ -292,11 +567,12 @@ class LakeTable:
     ) -> dict[str, list[str]]:
         """Write rows (must already carry BUCKET_COL) partitioned by bucket;
         return {bucket: [absolute files]}. When ``aligned`` the caller
-        guarantees the DataFrame is already hash-partitioned on the key
-        (e.g. straight out of the MERGE join), so each task holds disjoint
-        buckets and no repartition is needed — ``partitionBy`` splits the
-        few buckets per task into their own files. Otherwise repartition on
-        the bucket (+ an intra-bucket salt when files_per_bucket > 1).
+        guarantees each task already holds disjoint buckets (a frame
+        hash-partitioned on the key straight out of the MERGE join, or on
+        the bucket itself), so no repartition is needed — ``partitionBy``
+        splits the few buckets per task into their own files. Otherwise
+        repartition on the bucket (+ an intra-bucket salt when
+        files_per_bucket > 1).
 
         The directory carries a per-ATTEMPT unique suffix: two concurrent
         writers racing for the same version number would otherwise stage
@@ -417,14 +693,12 @@ class LakeTable:
             df = self.spark.read.schema(phys).parquet(*files)
         dfiles = [f for k in keys for f in dmap.get(k, [])]
         if dfiles:
-            df = self._resolve_deltas(m, schema, df, dfiles)
+            df = self._resolve_deltas(m, df, dfiles)
         if include_tombstones:
             return df
-        return df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(DELETED_COL)
+        return df.where(_live()).drop(DELETED_COL)
 
-    def _resolve_deltas(
-        self, m: dict, schema: T.StructType, base: DataFrame, dfiles: list[str]
-    ) -> DataFrame:
+    def _resolve_deltas(self, m: dict, base: DataFrame, dfiles: list[str]) -> DataFrame:
         """Merge-on-read resolution: base rows become 'replace'/'delete'
         events at their stored ts (batch_seq −1 so any delta wins an equal-ts
         tie, matching the CoW monotone guard's ``src.ts >= tgt.ts``); delta
@@ -432,41 +706,16 @@ class LakeTable:
         patches on absent keys drop, tombstones persist."""
         from py_mongo_sync_spark.operators.dedup import fold_net_events
 
-        key_cols, ts_col = m["key_cols"], m["ts_col"]
-        table_cols = [f.name for f in schema.fields]
-        payload = [c for c in table_cols if c not in key_cols and c != ts_col]
-        delta_phys = T.StructType(
-            schema.fields
-            + [
-                T.StructField(_OP, T.StringType(), True),
-                T.StructField(_PATCH, T.BooleanType(), True),
-                T.StructField(_UNSET, T.ArrayType(T.StringType()), True),
-                T.StructField(_INC, T.MapType(T.StringType(), T.DoubleType()), True),
-                T.StructField(_BSEQ, T.LongType(), True),
-            ]
-        )
-        deltas = self.spark.read.schema(delta_phys).parquet(*dfiles).select(
-            *table_cols, _OP, _PATCH, _UNSET, _INC, _BSEQ
-        )
-        base_ev = base.select(
-            *table_cols,
-            F.when(F.coalesce(F.col(DELETED_COL), F.lit(False)), F.lit("d"))
-            .otherwise(F.lit("u")).alias(_OP),
-            F.lit(False).alias(_PATCH),
-            F.lit(None).cast("array<string>").alias(_UNSET),
-            F.lit(None).cast("map<string,double>").alias(_INC),
-            F.lit(-1).cast("long").alias(_BSEQ),
-        )
+        p = _mor_read_plan(json.dumps(m["schema"]), tuple(m["key_cols"]), m["ts_col"])
+        deltas = self.spark.read.schema(p.delta_phys).parquet(*dfiles).select(*p.deltas)
         folded = fold_net_events(
-            base_ev.unionByName(deltas),
-            key_cols=key_cols, payload_cols=payload, ts_col=ts_col,
+            base.select(*p.base).unionByName(deltas),
+            key_cols=m["key_cols"], payload_cols=p.payload, ts_col=m["ts_col"],
             op_col=_OP, patch_col=_PATCH, seq_col=_BSEQ,
             unset_col=_UNSET, inc_col=_INC,
         )
         # net patch = UpdateOne on an absent key → no row
-        return folded.where(~F.col("_is_patch")).select(
-            *table_cols, (F.col("_op") == "d").alias(DELETED_COL)
-        )
+        return folded.where(p.upserted).select(*p.out)
 
     # --------------------------------------------------------------- merge
 
@@ -477,6 +726,7 @@ class LakeTable:
         all_buckets: bool = False,
         compact_threshold: int | None = None,
         retries: int = 2,
+        delivered_ts: int | None = None,
     ) -> dict:
         """MERGE INTO this table. ``source`` must have exactly one row per
         key (LWW-deduped, see operators/dedup.py) with table columns plus
@@ -492,6 +742,8 @@ class LakeTable:
         the source carries no column the table lacks, since schema
         evolution needs the probe. ``source=None`` (a batch with no data
         events) commits the batch id without running a Spark job.
+        ``delivered_ts`` (the batch's largest source optime, of any event)
+        is recorded with the batch id (``_batch_fields``).
 
         Optimistic-concurrency retry (the Iceberg commit loop): a
         ``CommitConflict`` — a concurrent writer won the version claim, or
@@ -514,7 +766,7 @@ class LakeTable:
                         "version": m["version"]}
             try:
                 return self._merge_attempt(
-                    source, batch_id, m, all_buckets, compact_threshold
+                    source, batch_id, m, all_buckets, compact_threshold, delivered_ts
                 )
             except CommitConflict as e:
                 last_conflict = e
@@ -529,15 +781,18 @@ class LakeTable:
         m: dict,
         all_buckets: bool,
         compact_threshold: int | None,
+        delivered_ts: int | None,
     ) -> dict:
         """One optimistic MERGE attempt against manifest snapshot ``m``."""
+        fields = self._batch_fields(m, batch_id, delivered_ts)
         if source is None:
-            return self._commit_empty(m, batch_id)
+            return self._commit_empty(m, batch_id, fields)
         if m.get("write_mode", "cow") == "mor":
             def inner(src, bid, mf, changed):
-                return self._merge_mor(src, bid, mf, changed, compact_threshold)
+                return self._merge_mor(src, bid, mf, changed, fields, compact_threshold)
         else:
-            inner = self._merge_inner
+            def inner(src, bid, mf, changed):
+                return self._merge_inner(src, bid, mf, changed, fields)
 
         if all_buckets and not self._new_cols(source, m):
             return inner(source, batch_id, m, list(range(m["n_buckets"])))
@@ -573,64 +828,27 @@ class LakeTable:
         nullable iff the batch actually carries values there (Iceberg
         mergeSchema; replaces oplog 'c' handling, mongo/handler.py:156-163).
         """
-        key_cols: list[str] = m["key_cols"]
-        n_buckets: int = m["n_buckets"]
-        schema = T.StructType.fromJson(m["schema"])
-        table_cols = [f.name for f in schema.fields]
-
-        src_schema = {f.name: f for f in source.schema.fields}
-        new_cols = self._new_cols(source, m)
-
-        has_unset = _UNSET in source.columns
-        has_inc = _INC in source.columns
-        opt_meta = ([F.col(_UNSET)] if has_unset else []) + (
-            [F.col(_INC)] if has_inc else []
+        table_json = json.dumps(m["schema"])
+        source_json = source.schema.json()
+        head = _prep_head(
+            table_json, source_json, tuple(manifest_bucket_cols(m)), m["n_buckets"]
         )
-        src = source.select(
-            *[F.col(c).cast(schema[c].dataType) for c in table_cols if c in source.columns],
-            *[F.col(c) for c in new_cols],
-            F.col(_OP),
-            F.col(_PATCH),
-            *opt_meta,
-        ).withColumn(BUCKET_COL, bucket_expr(manifest_bucket_cols(m), n_buckets))
+        src = source.select(*head.cols).withColumn(BUCKET_COL, head.bucket)
 
-        evolved: list[str] = []
+        evolved: tuple[str, ...] = ()
         if changed is None:
-            # a new column counts as "carried" when the batch has a value OR
-            # a residual $inc for it (an increment on a not-yet-existing
-            # column must still evolve the schema)
-            def _carried(c: str):
-                nonnull = F.col(c).isNotNull()
-                if has_inc:
-                    nonnull = nonnull | F.element_at(F.col(_INC), F.lit(c)).isNotNull()
-                return nonnull
-
-            probe = src.groupBy(BUCKET_COL).agg(
-                F.count(F.lit(1)).alias("_n"),
-                *[F.max(_carried(c)).alias(c) for c in new_cols],
-            ).collect()
+            probe = src.groupBy(BUCKET_COL).agg(*head.probe).collect()
             changed = sorted(r[BUCKET_COL] for r in probe)
-            evolved = [c for c in new_cols if any(r[c] for r in probe)]
-        for c in evolved:
-            schema = schema.add(T.StructField(c, src_schema[c].dataType, True))
-        table_cols = [f.name for f in schema.fields]
-        src = src.select(
-            *[
-                F.col(c).cast(schema[c].dataType) if c in src.columns
-                else F.lit(None).cast(schema[c].dataType).alias(c)
-                for c in table_cols
-            ],
-            F.col(_OP), F.col(_PATCH), *opt_meta, F.col(BUCKET_COL),
-        )
+            evolved = tuple(c for c in head.new_cols if any(r[c] for r in probe))
+        tail = _prep_tail(table_json, source_json, evolved)
         return {
-            "src": src, "schema": schema, "table_cols": table_cols,
-            "changed": changed, "has_unset": has_unset, "has_inc": has_inc,
+            "src": src.select(*tail.cols), "schema": tail.schema, "changed": changed,
+            "has_unset": head.has_unset, "has_inc": head.has_inc,
         }
 
-    def _commit_empty(self, m: dict, batch_id: int) -> dict:
+    def _commit_empty(self, m: dict, batch_id: int, fields: dict) -> dict:
         """Empty-batch fast path: record the batch id, touch no data."""
-        new_manifest = dict(m, version=m["version"] + 1,
-                            **self._batch_fields(m, batch_id))
+        new_manifest = dict(m, version=m["version"] + 1, **fields)
         new_manifest.pop("batch_ids", None)
         self._commit(new_manifest)
         return {"skipped": False, "batch_id": batch_id, "n_source": 0,
@@ -642,111 +860,37 @@ class LakeTable:
         batch_id: int,
         m: dict,
         changed: list[int] | None,
+        fields: dict,
     ) -> dict:
         t0 = time.monotonic()
-        key_cols: list[str] = m["key_cols"]
-        ts_col: str = m["ts_col"]
         n_buckets: int = m["n_buckets"]
         prep = self._prep_source(source, m, changed)
-        src, schema, table_cols, changed = (
-            prep["src"], prep["schema"], prep["table_cols"], prep["changed"]
-        )
-        has_unset, has_inc = prep["has_unset"], prep["has_inc"]
+        src, schema, changed = prep["src"], prep["schema"], prep["changed"]
         t_probe = time.monotonic() - t0
         if not changed:
-            return self._commit_empty(m, batch_id)
+            return self._commit_empty(m, batch_id, fields)
 
-        tgt = self.read(buckets=changed, include_tombstones=True).withColumn(
-            BUCKET_COL, bucket_expr(manifest_bucket_cols(m), n_buckets)
+        tgt = self.read(buckets=changed, include_tombstones=True)
+        p = _cow_plan(
+            schema.json(), tuple(tgt.columns), tuple(m["key_cols"]), m["ts_col"],
+            tuple(manifest_bucket_cols(m)), n_buckets, prep["has_unset"], prep["has_inc"],
         )
-        # target predates freshly-evolved columns → NULL-backfill them
-        for c in table_cols:
-            if c not in tgt.columns:
-                tgt = tgt.withColumn(c, F.lit(None).cast(schema[c].dataType))
-
         # --- the MERGE itself: one full-outer equi-join on the key, then
-        # pure column expressions. The source side carries an explicit
-        # shuffle_hash hint (guide §3.1): a microbatch plan runs without AQE
-        # and Catalyst's size estimate for the UDF+fold subtree is unusable,
-        # so the planner would default to SortMergeJoin and sort BOTH the
-        # table and the batch on every merge. The build side is the folded
-        # batch — bounded by batch size over the shuffle partitions, never
-        # by table size — so the hash map is safe at any table scale, and
-        # SHJ's output partitioning on the join key keeps the bucket-aligned
-        # write (measured: join+write 4.59 → 4.22 s floor on a 1M-event
-        # batch into a 2M-row table, interleaved best-of-4).
-        t = tgt.alias("t")
-        s = src.alias("s")
-        # plain equality (keys are non-null by construction): `<=>` would
-        # wrap the keys and break reuse of the fold's hash partitioning AND
-        # the bucket-aligned write (verified: eqNullSafe doubled the files
-        # per bucket).
-        joined = t.join(
-            s.hint("shuffle_hash"),
-            on=[t[c] == s[c] for c in key_cols], how="full_outer",
+        # pure column expressions (_cow_plan). The source side carries an
+        # explicit shuffle_hash hint (guide §3.1): a microbatch plan runs
+        # without AQE and Catalyst's size estimate for the UDF+fold subtree
+        # is unusable, so the planner would default to SortMergeJoin and
+        # sort BOTH the table and the batch on every merge. The build side
+        # is the folded batch — bounded by batch size over the shuffle
+        # partitions, never by table size — so the hash map is safe at any
+        # table scale, and SHJ's output partitioning on the join key keeps
+        # the bucket-aligned write (measured: join+write 4.59 → 4.22 s
+        # floor on a 1M-event batch into a 2M-row table, interleaved
+        # best-of-4).
+        joined = tgt.select(*p.target).alias("t").join(
+            src.alias("s").hint("shuffle_hash"), on=p.on, how="full_outer"
         )
-
-        s_key = F.col(f"s.{key_cols[0]}")
-        t_key = F.col(f"t.{key_cols[0]}")
-        matched = s_key.isNotNull() & t_key.isNotNull()
-        src_only = s_key.isNotNull() & t_key.isNull()
-        # monotone-ts guard: stale replayed rows never beat newer target rows
-        # (reference: strictly-forward _last_optime, common_syncer.py:50).
-        src_wins = F.col(f"s.{ts_col}") >= F.col(f"t.{ts_col}")
-        is_del = F.col(f"s.{_OP}") == "d"
-        is_patch = F.col(f"s.{_PATCH}")
-        t_dead = F.coalesce(F.col(f"t.{DELETED_COL}"), F.lit(False))
-
-        # deletes become tombstones (never physically dropped here — see
-        # expire_versions/compact); a patch never resurrects a dead key
-        # (UpdateOne without upsert); a replace does (ReplaceOne upsert=True).
-        applies = matched & src_wins & (~is_patch | ~t_dead)
-        keep = t_key.isNotNull() | (src_only & ~is_patch)
-
-        deleted_out = (
-            F.when(applies & is_del, F.lit(True))
-            .when(applies & ~is_patch, F.lit(False))
-            .when(src_only & is_del, F.lit(True))
-            .when(src_only, F.lit(False))
-            .otherwise(t_dead)
-        ).alias(DELETED_COL)
-
-        def patch_val(c: str):
-            """Three-valued per-column patch resolution (replaces bare
-            coalesce): $unset/$set-null → NULL; residual $inc → target
-            value + delta (NULL counts 0, Mongo's inc-on-missing rule);
-            $set → source value; untouched → keep target."""
-            tc, sc = F.col(f"t.{c}"), F.col(f"s.{c}")
-            typ = schema[c].dataType
-            v = F.coalesce(sc, tc)
-            if has_inc:
-                delta = F.element_at(F.col(f"s.{_INC}"), F.lit(c))
-                v = F.when(
-                    delta.isNotNull(),
-                    (F.coalesce(tc.cast("double"), F.lit(0.0)) + delta).cast(typ),
-                ).otherwise(v)
-            if has_unset:
-                hit = F.coalesce(
-                    F.array_contains(F.col(f"s.{_UNSET}"), F.lit(c)), F.lit(False)
-                )
-                v = F.when(hit, F.lit(None).cast(typ)).otherwise(v)
-            return v
-
-        def out_col(c: str):
-            tc, sc = F.col(f"t.{c}"), F.col(f"s.{c}")
-            return (
-                F.when(applies & is_patch, patch_val(c))
-                .when(applies & ~is_del, sc)
-                .when(applies & is_del, sc if c == ts_col else tc)
-                .when(src_only, sc)
-                .otherwise(tc)
-            ).alias(c)
-
-        merged = joined.where(keep).select(
-            *[out_col(c) for c in table_cols],
-            deleted_out,
-            F.coalesce(F.col(f"t.{BUCKET_COL}"), F.col(f"s.{BUCKET_COL}")).alias(BUCKET_COL),
-        )
+        merged = joined.where(p.keep).select(*p.out)
 
         t1 = time.monotonic()
         version = m["version"] + 1
@@ -773,9 +917,9 @@ class LakeTable:
             m,
             version=version,
             schema=schema.jsonValue(),
-            columns=table_cols,
+            columns=schema.fieldNames(),
             buckets=buckets,
-            **self._batch_fields(m, batch_id),
+            **fields,
         )
         new_manifest.pop("batch_ids", None)
         self._commit(new_manifest)
@@ -794,6 +938,7 @@ class LakeTable:
         batch_id: int,
         m: dict,
         changed: list[int] | None,
+        fields: dict,
         compact_threshold: int | None = None,
     ) -> dict:
         """Merge-on-read write path: append the batch's net events as
@@ -802,31 +947,30 @@ class LakeTable:
         any realistic batch touches ~every bucket and rewrites the table).
         Reads resolve base+deltas via the engine fold (see read());
         ``compact_threshold`` bounds read amplification by folding a
-        bucket's deltas into its base once that many accumulate."""
+        bucket's deltas into its base once that many accumulate.
+
+        The delta write runs in ``min(n_buckets, shuffle partitions)``
+        tasks: hash partitioning on the bucket still puts each bucket in
+        one task, so a batch writes one file per changed bucket, but a
+        small tail batch no longer pays for a task per bucket."""
         t0 = time.monotonic()
         prep = self._prep_source(source, m, changed)
-        src, schema, table_cols, changed = (
-            prep["src"], prep["schema"], prep["table_cols"], prep["changed"]
-        )
+        src, schema, changed = prep["src"], prep["schema"], prep["changed"]
         if not changed:
-            return self._commit_empty(m, batch_id)
+            return self._commit_empty(m, batch_id, fields)
 
         version = m["version"] + 1
-        # normalize optional meta so every delta file shares one physical
-        # schema (older files read back NULL for later-evolved columns)
-        delta = src.select(
-            *table_cols,
-            F.col(_OP),
-            F.col(_PATCH),
-            (F.col(_UNSET) if prep["has_unset"]
-             else F.lit(None).cast("array<string>")).alias(_UNSET),
-            (F.col(_INC) if prep["has_inc"]
-             else F.lit(None).cast("map<string,double>")).alias(_INC),
-            F.lit(batch_id).cast("long").alias(_BSEQ),
-            F.col(BUCKET_COL),
+        head = _mor_delta_head(
+            tuple(schema.fieldNames()), prep["has_unset"], prep["has_inc"]
         )
+        n_tasks = min(
+            m["n_buckets"], int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        )
+        delta = src.select(
+            *head, F.lit(batch_id).cast("long").alias(_BSEQ)
+        ).repartition(n_tasks, BUCKET_COL)
         new_files = self._write_buckets(
-            delta, version, m["n_buckets"], 1, aligned=False, root="delta"
+            delta, version, m["n_buckets"], 1, aligned=True, root="delta"
         )
         stray = set(new_files) - {str(b) for b in changed}
         if stray:
@@ -845,9 +989,9 @@ class LakeTable:
             m,
             version=version,
             schema=schema.jsonValue(),
-            columns=table_cols,
+            columns=schema.fieldNames(),
             deltas=deltas,
-            **self._batch_fields(m, batch_id),
+            **fields,
         )
         new_manifest.pop("batch_ids", None)
         self._commit(new_manifest)

@@ -27,9 +27,10 @@ from __future__ import annotations
 import json
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from py_mongo_sync_spark.config import SyncConfig
+from py_mongo_sync_spark.exprcache import per_context
 from py_mongo_sync_spark.functions.namespace import (
     rename_ns,
     system_ns_filter,
@@ -80,6 +81,77 @@ UNSUPPORTED_OPS_RE = (
 )
 
 
+DATA_OPS = ("i", "u", "d")
+
+
+@per_context
+def _envelope_exprs(
+    include_colls: frozenset,
+    db_mapping: tuple,
+    ns_mapping: tuple,
+    accept: tuple[str, ...],
+    ops: tuple[str, ...],
+) -> tuple[Column, Column]:
+    """``(kept, renamed)`` over a raw envelope row: whether it is one of
+    ``ops`` that passes the config's namespace filter and whose renamed
+    namespace is in ``accept``, and that renamed namespace. Both read the
+    source ``ns``."""
+    cfg = SyncConfig(include_colls=include_colls, db_mapping=dict(db_mapping),
+                     ns_mapping=dict(ns_mapping))
+    op, ns = F.col("op"), F.col("ns")
+    renamed = rename_ns(cfg, ns)
+    kept = (valid_oplog_filter(cfg, op, ns) & system_ns_filter(ns)
+            & renamed.isin(*accept) & op.isin(*ops))
+    return kept, renamed
+
+
+@per_context
+def _stats_plan(
+    include_colls: frozenset,
+    db_mapping: tuple,
+    ns_mapping: tuple,
+    accept: tuple[str, ...],
+    grouped: bool,
+) -> tuple[tuple[Column, ...], tuple[Column, ...], tuple[Column, ...]]:
+    """The envelope aggregation (``CdcPipeline._envelope_stats``): its
+    input projection, grouping and aggregates."""
+    kept, renamed = _envelope_exprs(
+        include_colls, db_mapping, ns_mapping, accept, DATA_OPS + ("c",)
+    )
+    op, ts, k = F.col("op"), F.col("ts"), F.col("_kept")
+    rows = (ts, op, F.col("doc"), renamed.alias("ns"), kept.alias("_kept"))
+    aggs = (
+        F.count(F.when(k, 1)).alias("n_events"),
+        F.count(F.when(k & (op != "c"), 1)).alias("n_data"),
+        F.max(F.when(k, ts)).alias("max_ts"),
+        F.min(F.when(k, ts)).alias("min_ts"),
+        F.count(F.when(k & (op == "u") & F.col("doc").rlike(UNSUPPORTED_OPS_RE), 1))
+        .alias("n_unsupported_ops"),
+        # when() is NULL for data rows and collect_list skips NULLs, so
+        # only the rare 'c' rows are ever buffered
+        F.collect_list(F.when(k & (op == "c"), F.struct("ts", "doc"))).alias("cmds"),
+        F.min(ts).alias("min_delivered_ts"),
+        F.max(ts).alias("max_delivered_ts"),
+    )
+    return rows, ((F.col("ns"),) if grouped else ()), aggs
+
+
+@per_context
+def _keyed() -> Column:
+    return F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull()
+
+
+@per_context
+def _row_ts() -> Column:
+    """Envelope optime → the table's row timestamp."""
+    return F.timestamp_seconds(F.lit(FIXTURE_EPOCH) + F.col("ts"))
+
+
+@per_context
+def _ns_is(ns: str) -> Column:
+    return F.col("ns") == ns
+
+
 class CdcPipeline:
     def __init__(
         self,
@@ -126,38 +198,35 @@ class CdcPipeline:
         All column expressions + one Arrow parse UDF. With ``multi_ns`` the
         ns column survives (MultiCdcPipeline parses the whole batch ONCE
         and routes per-table afterwards)."""
-        df = parsed_events(self._filtered(events, multi_ns), with_tool=True)
+        # the envelope stats count the same rows: both use _envelope_exprs
+        kept, renamed = _envelope_exprs(*self._ns_key(), self._accepted(multi_ns), DATA_OPS)
+        df = parsed_events(events.where(kept).withColumn("ns", renamed), with_tool=True)
         keep = ["ts", "op", "is_patch", "unset_cols", "inc_map", "conv_id", "turn_idx"]
         if multi_ns is not None:
             keep.insert(0, "ns")
         if "seq" in df.columns:
             keep.insert(1, "seq")
         df = project_fields(df, self.cfg, always_keep=keep)
-        return df.where(F.col("conv_id").isNotNull() & F.col("turn_idx").isNotNull())
+        return df.where(_keyed())
 
-    def _filtered(
-        self,
-        events: DataFrame,
-        multi_ns: list[str] | None = None,
-        ops: tuple[str, ...] = ("i", "u", "d"),
-    ) -> DataFrame:
-        """The envelope-level filter/rename shared by transform() and the
-        envelope stats — must keep exactly the same data rows in both."""
-        op, ns = F.col("op"), F.col("ns")
-        df = events.where(
-            valid_oplog_filter(self.cfg, op, ns) & system_ns_filter(ns)
-        ).withColumn("ns", rename_ns(self.cfg, ns))
+    def _ns_key(self) -> tuple:
+        """Everything the namespace filter and rename read from the config."""
+        cfg = self.cfg
+        return (
+            frozenset(cfg.include_colls),
+            tuple(sorted(cfg.db_mapping.items())),
+            tuple(sorted(cfg.ns_mapping.items())),
+        )
+
+    def _accepted(self, multi_ns: list[str] | None) -> tuple[str, ...]:
+        """Destination namespaces this batch keeps. A rename_table command
+        inside the CURRENT batch widens the set to {old ns, new ns} for
+        this batch only: both name the same (renamed) table, so pre- and
+        post-rename events of a mixed batch land together, like the
+        reference's sequential replay where the command is a barrier."""
         if multi_ns is not None:
-            df = df.where(F.col("ns").isin(multi_ns))
-        else:
-            # a rename_table command inside the CURRENT batch widens the
-            # accepted set to {old ns, new ns} for this batch only — both
-            # name the same (renamed) table, so pre- and post-rename events
-            # of a mixed batch land together, like the reference's
-            # sequential replay where the command is a barrier
-            accept = sorted(self._batch_accept_ns or {self.dst_ns})
-            df = df.where(F.col("ns").isin(accept))
-        return df.where(op.isin(*ops))
+            return tuple(sorted(multi_ns))
+        return tuple(sorted(self._batch_accept_ns or {self.dst_ns}))
 
     def _envelope_stats(
         self, events: DataFrame, multi_ns: list[str] | None = None
@@ -167,33 +236,24 @@ class CdcPipeline:
         are never parsed here). Per namespace it yields:
 
         - the event count (i/u/d/c) and data-event count, and the optime
-          range → the lineage row (A4, optime_logger analogue) and the
-          staleness gate;
+          range → the lineage row (A4, optime_logger analogue);
         - the batch's DDL commands (op='c') in optime order → explicit
           schema evolution (reference 'c' handling, mongo/handler.py:156-163);
         - the count of updates carrying an operator the MERGE cannot
           express (``UNSUPPORTED_OPS_RE``).
 
+        It also yields the optime range over EVERY delivered row, no-ops
+        and filtered namespaces included (``min_delivered_ts`` /
+        ``max_delivered_ts``): the staleness gate compares where the stream
+        resumes with where it stopped, and either edge may be an event the
+        lineage never counts.
+
         Returns one stats dict, or with ``multi_ns`` one per namespace.
         """
-        op = F.col("op")
-        group = ["ns"] if multi_ns is not None else []
-        rows = (
-            self._filtered(events, multi_ns, ops=("i", "u", "d", "c"))
-            .groupBy(*group)
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.count(F.when(op != "c", 1)).alias("n_data"),
-                F.max("ts").alias("max_ts"),
-                F.min("ts").alias("min_ts"),
-                F.count(F.when((op == "u") & F.col("doc").rlike(UNSUPPORTED_OPS_RE), 1))
-                .alias("n_unsupported_ops"),
-                # when() is NULL for data rows and collect_list skips NULLs,
-                # so only the rare 'c' rows are ever buffered
-                F.collect_list(F.when(op == "c", F.struct("ts", "doc"))).alias("cmds"),
-            )
-            .collect()
+        rows_cols, group, aggs = _stats_plan(
+            *self._ns_key(), self._accepted(multi_ns), multi_ns is not None
         )
+        rows = events.select(*rows_cols).groupBy(*group).agg(*aggs).collect()
 
         def as_dict(r) -> dict:
             if r is None:  # a namespace with no events in this batch
@@ -206,7 +266,12 @@ class CdcPipeline:
         if multi_ns is None:
             return as_dict(rows[0])  # a global aggregate always yields one row
         by_ns = {r["ns"]: r for r in rows}
-        return {nsv: as_dict(by_ns.get(nsv)) for nsv in multi_ns}
+        # the delivered range spans every group, other namespaces included
+        lo = [r["min_delivered_ts"] for r in rows if r["min_delivered_ts"] is not None]
+        hi = [r["max_delivered_ts"] for r in rows if r["max_delivered_ts"] is not None]
+        delivered = {"min_delivered_ts": min(lo, default=None),
+                     "max_delivered_ts": max(hi, default=None)}
+        return {nsv: dict(as_dict(by_ns.get(nsv)), **delivered) for nsv in multi_ns}
 
     def _apply_commands(self, commands: list[tuple[int, str]]) -> dict:
         """Replay DDL commands — skip-on-failure like the reference
@@ -359,9 +424,13 @@ class CdcPipeline:
                 "(strict_ops=True)"
             )
 
-        # (b) resume staleness gate (reference mongo/syncer.py:277-284)
-        if not self._resume_checked and stats["min_ts"] is not None:
-            self.cplog.assert_not_stale(stats["min_ts"])
+        # (b) resume staleness gate (reference mongo/syncer.py:277-284): the
+        # first delivered optime against the larger of the lineage watermark
+        # and the last delivered optime the table committed
+        if not self._resume_checked and stats["min_delivered_ts"] is not None:
+            delivered = self.table.manifest().get("max_delivered_ts") if (
+                self.table.exists()) else None
+            self.cplog.assert_not_stale(stats["min_delivered_ts"], delivered)
         self._resume_checked = True
         self.stage = "OPLOG_SYNC"
 
@@ -375,9 +444,7 @@ class CdcPipeline:
         # events has an empty fold, so the MERGE only records its id; a DDL
         # command keeps the fold (a rename widens the namespaces it accepts).
         source = None if stats["n_data"] == 0 and not stats["commands"] else (
-            folded.withColumn(
-                "ts", F.timestamp_seconds(F.lit(FIXTURE_EPOCH) + F.col("ts"))
-            )
+            folded.withColumn("ts", _row_ts())
         )
 
         # (f) MERGE. Below n_buckets × probe_skip_factor data events the
@@ -388,6 +455,7 @@ class CdcPipeline:
             source, batch_id=batch_id,
             all_buckets=stats["n_data"] >= self.cfg.n_buckets * self.cfg.probe_skip_factor,
             compact_threshold=self.cfg.compact_threshold,
+            delivered_ts=stats["max_delivered_ts"],
         )
 
         # (g) lineage/metrics — one row per batch (reference analogue: the
@@ -578,7 +646,7 @@ class MultiCdcPipeline:
             self.spark.sparkContext.setLocalProperty(
                 "spark.scheduler.pool", "cdc-merge"
             )
-            slice_df = folded.where(F.col("ns") == ns).drop("ns")
+            slice_df = folded.where(_ns_is(ns)).drop("ns")
             return ns, p._finish_batch(
                 slice_df, stats[ns], batch_id, _time.monotonic(),
                 t_pstats=t_pstats,
