@@ -48,7 +48,6 @@ class SyncConfig:
     ns_mapping: dict[str, str] = field(default_factory=dict)
     include_fields: frozenset[str] = frozenset()
     n_buckets: int = 16
-    files_per_bucket: int = 1
     #: 'cow' rewrites changed buckets per MERGE (read-optimized);
     #: 'mor' appends per-bucket net-event delta files and resolves at read
     #: time (write ∝ batch size — the 100 TB streaming default), compacting

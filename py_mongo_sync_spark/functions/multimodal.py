@@ -29,13 +29,6 @@ def decode_image(payload: bytes, fake: bool = False) -> dict:
     return {"width": 64 + (h % 193), "height": 64 + ((h * 7) % 131), "mode": "RGB"}
 
 
-def decode_audio(payload: bytes, fake: bool = False) -> dict:
-    if not fake:
-        raise NotImplementedError("audio decode requires ffmpeg/librosa — not in this environment")
-    h = sum(payload[:8]) if payload else 0
-    return {"sample_rate": 16000, "n_samples": 1000 + (h % 9000)}
-
-
 def extract_binary_metadata(df: DataFrame, binary_col: str, id_col: str) -> DataFrame:
     """Arrow-batched metadata extraction over a binary column. The UDF sees
     pandas batches (thousands of rows per Arrow batch), never single rows —

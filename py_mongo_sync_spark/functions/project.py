@@ -109,11 +109,3 @@ def nested_to_flat(df: DataFrame, struct_cols: list[str] | None = None) -> DataF
             out.append(F.col(f"`{f.name}`"))
     return df.select(*out)
 
-
-def merge_doc_cols(new: DataFrame, cols: list[str], prefix_new: str, prefix_old: str):
-    """Deep-merge analogue (doc_utils.py:52-60): per-column coalesce of a
-    partial update over the old row — used inside MERGE UPDATE SET."""
-    return [
-        F.coalesce(F.col(f"{prefix_new}.{c}"), F.col(f"{prefix_old}.{c}")).alias(c)
-        for c in cols
-    ]

@@ -561,7 +561,6 @@ class LakeTable:
         df: DataFrame,
         version: int,
         n_buckets: int,
-        files_per_bucket: int,
         aligned: bool = False,
         root: str = "data",
     ) -> dict[str, list[str]]:
@@ -571,8 +570,7 @@ class LakeTable:
         hash-partitioned on the key straight out of the MERGE join, or on
         the bucket itself), so no repartition is needed — ``partitionBy``
         splits the few buckets per task into their own files. Otherwise
-        repartition on the bucket (+ an intra-bucket salt when
-        files_per_bucket > 1).
+        repartition on the bucket.
 
         The directory carries a per-ATTEMPT unique suffix: two concurrent
         writers racing for the same version number would otherwise stage
@@ -585,11 +583,7 @@ class LakeTable:
         out = os.path.join(self.path, root,
                            f"v{version:08d}-{uuid.uuid4().hex[:8]}")
         if not aligned:
-            if files_per_bucket > 1:
-                part_cols = [F.col(BUCKET_COL), F.pmod(F.xxhash64(F.rand(seed=0)), F.lit(files_per_bucket))]
-                df = df.repartition(n_buckets * files_per_bucket, *part_cols)
-            else:
-                df = df.repartition(n_buckets, BUCKET_COL)
+            df = df.repartition(n_buckets, BUCKET_COL)
         df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(out)
         buckets: dict[str, list[str]] = {}
         if os.path.exists(out):
@@ -610,7 +604,6 @@ class LakeTable:
         key_cols: list[str],
         ts_col: str = "ts",
         n_buckets: int = 16,
-        files_per_bucket: int = 1,
         write_mode: str = "cow",
         bucket_cols: list[str] | None = None,
     ) -> "LakeTable":
@@ -637,7 +630,7 @@ class LakeTable:
         dfb = df.withColumn(DELETED_COL, F.lit(False)).withColumn(
             BUCKET_COL, bucket_expr(bcols, n_buckets)
         )
-        buckets = self._write_buckets(dfb, version, n_buckets, files_per_bucket)
+        buckets = self._write_buckets(dfb, version, n_buckets)
         manifest = {
             "version": version,
             "schema": df.schema.jsonValue(),
@@ -646,7 +639,6 @@ class LakeTable:
             "bucket_cols": bcols,
             "ts_col": ts_col,
             "n_buckets": n_buckets,
-            "files_per_bucket": files_per_bucket,
             "write_mode": write_mode,
             "buckets": buckets,
             "deltas": {},
@@ -897,10 +889,7 @@ class LakeTable:
         buckets = dict(m["buckets"])
         for b in changed:
             buckets[str(b)] = []
-        new_files = self._write_buckets(
-            merged, version, n_buckets, m.get("files_per_bucket", 1),
-            aligned=m.get("files_per_bucket", 1) == 1,
-        )
+        new_files = self._write_buckets(merged, version, n_buckets, aligned=True)
         # Guard: every written bucket must be one we read (a source row whose
         # true bucket fell outside the changed set would otherwise replace
         # that bucket's files with only itself — silent loss of its other
@@ -970,7 +959,7 @@ class LakeTable:
             *head, F.lit(batch_id).cast("long").alias(_BSEQ)
         ).repartition(n_tasks, BUCKET_COL)
         new_files = self._write_buckets(
-            delta, version, m["n_buckets"], 1, aligned=True, root="delta"
+            delta, version, m["n_buckets"], aligned=True, root="delta"
         )
         stray = set(new_files) - {str(b) for b in changed}
         if stray:
@@ -1043,9 +1032,7 @@ class LakeTable:
             buckets=[int(b) for b in target], include_tombstones=True
         ).withColumn(BUCKET_COL, bucket_expr(manifest_bucket_cols(m), m["n_buckets"]))
         version = m["version"] + 1
-        new_files = self._write_buckets(
-            resolved, version, m["n_buckets"], m.get("files_per_bucket", 1)
-        )
+        new_files = self._write_buckets(resolved, version, m["n_buckets"])
         buckets_map = dict(m["buckets"])
         for k in target:
             buckets_map[k] = []
@@ -1266,7 +1253,7 @@ class LakeTable:
             ~F.coalesce(F.col(DELETED_COL), F.lit(False))
             | (F.col(m["ts_col"]) >= F.lit(before_ts))
         )
-        buckets = self._write_buckets(kept, version, m["n_buckets"], m.get("files_per_bucket", 1))
+        buckets = self._write_buckets(kept, version, m["n_buckets"])
         all_buckets = {str(b): [] for b in range(m["n_buckets"])}
         all_buckets.update(buckets)
         # the rewrite resolved any pending deltas into the new base — keeping
@@ -1354,9 +1341,7 @@ class LakeTable:
         df = self.read(include_tombstones=True).withColumn(
             BUCKET_COL, bucket_expr(manifest_bucket_cols(m), new_n_buckets)
         )
-        buckets = self._write_buckets(
-            df, version, new_n_buckets, m.get("files_per_bucket", 1)
-        )
+        buckets = self._write_buckets(df, version, new_n_buckets)
         all_buckets = {str(b): [] for b in range(new_n_buckets)}
         all_buckets.update(buckets)
         self._commit(dict(

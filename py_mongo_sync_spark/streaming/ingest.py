@@ -13,7 +13,8 @@ Reference analogue: the infinite oplog tail-and-apply loop
 (/root/reference/mongosync/mongo/syncer.py:239-366) — here the "apply"
 is a dedup decision instead of an oplog patch, but the streaming
 contract (foreachBatch, idempotent per-batch commit, resumable
-checkpoint) is identical to CdcPipeline.run_stream.
+checkpoint) is identical to CdcPipeline.run_stream — both run on
+``run_foreach_batch``.
 
 Crash-consistency between the two tables: the docs MERGE commits before
 the bands MERGE. If the driver dies between them, the replayed batch
@@ -40,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from py_mongo_sync_spark.operators.ingest_dedup import ingest_batch
 from py_mongo_sync_spark.operators.neardup import banded_signature_rows
 from py_mongo_sync_spark.plans.lake import LakeTable
-from py_mongo_sync_spark.streaming.pipeline import checkpoint_epoch
+from py_mongo_sync_spark.streaming.pipeline import run_foreach_batch
 
 
 class NeardupIngestPipeline:
@@ -186,21 +187,11 @@ class NeardupIngestPipeline:
         available_now: bool = True,
         processing_time: str = "1 second",
     ):
-        """Drain (or tail) a document stream through apply_batch, with the
-        same epoch binding as CdcPipeline.run_stream: a fresh Spark
-        checkpoint is a new batch-id sequence for BOTH tables."""
-        epoch = checkpoint_epoch(spark_checkpoint_dir)
-        self.docs_table.epoch = epoch
-        self.bands_table.epoch = epoch
-        writer = (
-            docs_stream.writeStream.foreachBatch(
-                lambda df, bid: self.apply_batch(df, bid)
-            )
-            .option("checkpointLocation", spark_checkpoint_dir)
-            .outputMode("update")
+        """Drain (or tail) a document stream through apply_batch
+        (``run_foreach_batch``): a fresh Spark checkpoint is a new batch-id
+        sequence for BOTH tables."""
+        return run_foreach_batch(
+            docs_stream, spark_checkpoint_dir,
+            lambda df, bid: self.apply_batch(df, bid),
+            (self.docs_table, self.bands_table), available_now, processing_time,
         )
-        if available_now:
-            q = writer.trigger(availableNow=True).start()
-            q.awaitTermination()
-            return q
-        return writer.trigger(processingTime=processing_time).start()

@@ -68,6 +68,38 @@ def checkpoint_epoch(spark_checkpoint_dir: str) -> str:
         f.write(epoch)
     os.replace(tmp, marker)
     return epoch
+
+
+def run_foreach_batch(
+    stream: DataFrame,
+    spark_checkpoint_dir: str,
+    apply,
+    epoch_holders,
+    available_now: bool = True,
+    processing_time: str = "1 second",
+):
+    """Run ``stream`` through ``apply(df, batch_id)`` under one Spark
+    checkpoint — the driver behind every pipeline's ``run_stream``. Each of
+    ``epoch_holders`` (tables, checkpoint logs) first gets the checkpoint's
+    epoch, so its batch-id replay window is scoped to this id sequence.
+    With ``available_now`` the query drains everything and returns once
+    stopped; otherwise it runs a microbatch every ``processing_time`` like
+    the reference's infinite tail loop (mongo/syncer.py:239-366)."""
+    epoch = checkpoint_epoch(spark_checkpoint_dir)
+    for h in epoch_holders:
+        h.epoch = epoch
+    writer = (
+        stream.writeStream.foreachBatch(apply)
+        .option("checkpointLocation", spark_checkpoint_dir)
+        .outputMode("update")
+    )
+    if available_now:
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+        return q
+    return writer.trigger(processingTime=processing_time).start()
+
+
 PAYLOAD_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "score"]
 
 #: Mongo update operators the engine cannot express on a lake table; events
@@ -185,7 +217,6 @@ class CdcPipeline:
             key_cols=KEY_COLS,
             ts_col="ts",
             n_buckets=self.cfg.n_buckets,
-            files_per_bucket=self.cfg.files_per_bucket,
             write_mode=self.cfg.write_mode,
         )
         self.stage = "POST_INITIAL_SYNC"
@@ -510,7 +541,6 @@ class CdcPipeline:
 
     # -------------------------------------------------------------- stream
 
-
     def run_stream(
         self,
         events_stream: DataFrame,
@@ -518,24 +548,14 @@ class CdcPipeline:
         available_now: bool = True,
         processing_time: str = "1 second",
     ):
-        """Phase B: the oplog tail. With ``available_now`` the query drains
-        everything and stops (test/bench mode); otherwise it runs continuous
-        microbatches like the reference's infinite tail loop
-        (mongo/syncer.py:239-366)."""
-        self.table.epoch = checkpoint_epoch(spark_checkpoint_dir)
-        self.cplog.epoch = self.table.epoch
-        writer = (
-            events_stream.writeStream.foreachBatch(
-                lambda df, bid: self.apply_batch(df, bid)
-            )
-            .option("checkpointLocation", spark_checkpoint_dir)
-            .outputMode("update")
+        """Phase B: the oplog tail (``run_foreach_batch``). With
+        ``available_now`` the query drains everything and stops (test/bench
+        mode); otherwise it runs continuous microbatches."""
+        return run_foreach_batch(
+            events_stream, spark_checkpoint_dir,
+            lambda df, bid: self.apply_batch(df, bid),
+            (self.table, self.cplog), available_now, processing_time,
         )
-        if available_now:
-            q = writer.trigger(availableNow=True).start()
-            q.awaitTermination()
-            return q
-        return writer.trigger(processingTime=processing_time).start()
 
     # --------------------------------------------------------------- batch
 
@@ -667,20 +687,9 @@ class MultiCdcPipeline:
 
     def run_stream(self, events_stream: DataFrame, spark_checkpoint_dir: str,
                    available_now: bool = True):
-        epoch = checkpoint_epoch(spark_checkpoint_dir)
-        for p in self.pipes.values():
-            p.table.epoch = epoch
-            p.cplog.epoch = epoch
-        writer = (
-            events_stream.writeStream.foreachBatch(
-                lambda df, bid: self.apply_batch(df, bid)
-            )
-            .option("checkpointLocation", spark_checkpoint_dir)
-            .outputMode("update")
+        return run_foreach_batch(
+            events_stream, spark_checkpoint_dir,
+            lambda df, bid: self.apply_batch(df, bid),
+            [h for p in self.pipes.values() for h in (p.table, p.cplog)],
+            available_now,
         )
-        q = writer.trigger(availableNow=True).start() if available_now else (
-            writer.trigger(processingTime="1 second").start()
-        )
-        if available_now:
-            q.awaitTermination()
-        return q

@@ -1,30 +1,37 @@
-"""Second sink flavor: the ES-analogue SearchDocSink behind
-SearchSyncPipeline (reference dispatch sync.py:25-34; ES syncer
-es/syncer.py). Same transform/fold, different destination semantics:
-physical deletes, atomic index swaps, partial-update translation."""
+"""Current-document sync through CdcPipeline's LakeTable sink — the
+scenarios of the reference's second syncer (dispatch sync.py:25-34; ES
+syncer es/syncer.py), served by the one table format: partial-update
+translation, deletes as tombstones that every read hides, batch-id replay
+skips, the epoch guard, and per-batch rewrites of touched buckets only."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 
 import pandas as pd
 from pyspark.sql import functions as F
 
 from py_mongo_sync_spark.config import SyncConfig
-from py_mongo_sync_spark.sinks import SearchSyncPipeline
 from py_mongo_sync_spark.sources.generate import (
     gen_oplog_events,
     gen_transcripts_snapshot,
     oracle_replay,
 )
+from py_mongo_sync_spark.streaming.pipeline import CdcPipeline
 
 NS = "chat.transcripts"
+ENVELOPE = "ts long, op string, ns string, doc string"
 
 
-def _pipe(spark, tmp_path):
+def _pipe(spark, tmp_path, n_buckets=2):
     cfg = SyncConfig(dst_path=str(tmp_path / "index"),
-                     checkpoint_path=str(tmp_path / "cp"), n_buckets=2)
-    return SearchSyncPipeline(spark, cfg)
+                     checkpoint_path=str(tmp_path / "cp"), n_buckets=n_buckets)
+    return CdcPipeline(spark, cfg)
+
+
+def _keys(pipe) -> set:
+    return {(r["conv_id"], r["turn_idx"]) for r in pipe.table.read().collect()}
 
 
 def test_search_sink_matches_oracle_over_batches(spark, tmp_path):
@@ -43,24 +50,51 @@ def test_search_sink_matches_oracle_over_batches(spark, tmp_path):
         )
 
     expected = oracle_replay(snap.toPandas(), ev.toPandas())
-    got = pipe.read().toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    got = pipe.table.read().toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     cols = [c for c in expected.columns if c in got.columns]
     pd.testing.assert_frame_equal(
         got[cols], expected[cols].reset_index(drop=True), check_dtype=False
     )
 
 
-def test_search_sink_deletes_are_physical_and_replays_skip(spark, tmp_path):
+def test_search_sink_deletes_are_tombstones_and_replays_skip(spark, tmp_path):
+    """A delete leaves a tombstone that every read hides; vacuum purges it;
+    re-applying the batch id is a skip."""
     pipe = _pipe(spark, tmp_path)
     pipe.initial_sync(gen_transcripts_snapshot(spark, 6, 2))
     d = spark.createDataFrame(
         [(50, "d", NS, json.dumps({"conv_id": "conv_000001", "turn_idx": 1}))],
-        "ts long, op string, ns string, doc string",
+        ENVELOPE,
     )
     assert not pipe.apply_batch(d, 0)["skipped"]
-    keys = {(r["conv_id"], r["turn_idx"]) for r in pipe.read().collect()}
-    assert ("conv_000001", 1) not in keys
+    assert ("conv_000001", 1) not in _keys(pipe)
+    dead = pipe.table.read(include_tombstones=True).where("_deleted").collect()
+    assert [(r["conv_id"], r["turn_idx"]) for r in dead] == [("conv_000001", 1)]
     assert pipe.apply_batch(d, 0)["skipped"]  # idempotent on batch_id
+
+    pipe.table.vacuum_tombstones(before_ts=dt.datetime(2100, 1, 1))
+    assert pipe.table.read(include_tombstones=True).where("_deleted").count() == 0
+    assert ("conv_000001", 1) not in _keys(pipe)
+    assert len(_keys(pipe)) == 6 * 2 - 1
+
+
+def test_search_sink_stale_insert_after_delete_stays_deleted(spark, tmp_path):
+    """A delete at ts 100, then a replayed insert of the same key at ts 50
+    in a later batch: the tombstone's ts wins, the key stays deleted."""
+    pipe = _pipe(spark, tmp_path)
+    snap = spark.createDataFrame(
+        [(k, 0, "user", "t", pd.Timestamp(1_700_000_010, unit="s").to_pydatetime())
+         for k in ("a", "b")],
+        "conv_id string, turn_idx int, role string, text string, ts timestamp")
+    pipe.initial_sync(snap)
+    key = {"conv_id": "a", "turn_idx": 0}
+    pipe.apply_batch(spark.createDataFrame(
+        [(100, "d", NS, json.dumps(key))], ENVELOPE), 0)
+    res = pipe.apply_batch(spark.createDataFrame(
+        [(50, "i", NS, json.dumps(dict(key, role="user", text="zombie")))],
+        ENVELOPE), 1)
+    assert not res["skipped"]
+    assert _keys(pipe) == {("b", 0)}
 
 
 def test_search_sink_partial_update_translation(spark, tmp_path):
@@ -77,9 +111,9 @@ def test_search_sink_partial_update_translation(spark, tmp_path):
                                   "$inc": {"score": 2.5}})),
         (63, "u", NS, json.dumps({"conv_id": "ghost", "turn_idx": 0,
                                   "$set": {"text": "x"}})),  # absent → no-op
-    ], "ts long, op string, ns string, doc string")
+    ], ENVELOPE)
     pipe.apply_batch(ev, 0)
-    got = {(r["conv_id"], r["turn_idx"]): r.asDict() for r in pipe.read().collect()}
+    got = {(r["conv_id"], r["turn_idx"]): r.asDict() for r in pipe.table.read().collect()}
     assert got[("conv_000000", 0)]["text"] == "patched"
     assert got[("conv_000000", 0)]["role"] is None
     assert got[("conv_000000", 1)]["score"] == 2.5  # evolved via the event
@@ -87,94 +121,90 @@ def test_search_sink_partial_update_translation(spark, tmp_path):
 
 
 def test_search_sink_rewrites_only_touched_buckets(spark, tmp_path):
-    """r2 VERDICT scale fix: per-batch index I/O must be O(touched
-    buckets), not O(index). A one-key batch against a 10× index writes
-    ~the same bytes (only that key's bucket), and the new version dir
-    contains only the touched bucket's files."""
+    """Per-batch I/O is O(touched buckets), not O(table): a one-key batch
+    against a 10× table writes files for that key's bucket only, about a
+    bucket's worth of bytes, and every other bucket keeps its files."""
     import os
 
     def batch_bytes(n_convs, sub):
         cfg = SyncConfig(dst_path=str(tmp_path / sub / "index"),
                          checkpoint_path=str(tmp_path / sub / "cp"),
                          n_buckets=8)
-        pipe = SearchSyncPipeline(spark, cfg)
+        pipe = CdcPipeline(spark, cfg)
         pipe.initial_sync(gen_transcripts_snapshot(spark, n_convs, 5))
+        before = pipe.table.manifest()["buckets"]
         ev = spark.createDataFrame(
             [(10_000, "u", NS,
               json.dumps({"conv_id": "conv_000000", "turn_idx": 0,
                           "role": "user", "text": "patched"}))],
-            "ts long, op string, ns string, doc string")
+            ENVELOPE)
         res = pipe.apply_batch(ev, 0)
         assert res["changed_buckets"] == 1
-        vdir = pipe.sink._data_dir(res["version"])
-        bucket_dirs = [d for d in os.listdir(vdir) if d.startswith("_sbucket=")]
-        assert len(bucket_dirs) == 1  # only the touched bucket materialized
-        total = 0
-        for root, _, files in os.walk(vdir):
-            total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        return total, pipe
+        after = pipe.table.manifest()["buckets"]
+        touched = [b for b in after if after[b] != before[b]]
+        assert len(touched) == 1  # only the touched bucket was rewritten
+        new = set(after[touched[0]]) - set(before[touched[0]])
+        assert new
+        return sum(os.path.getsize(f) for f in new), pipe
 
     small, _ = batch_bytes(40, "s")        # 200 docs
     big, pipe = batch_bytes(400, "b")      # 2000 docs (10×)
-    # bucket sizes grow 10× but a bucket is 1/8 of the index: far below a
-    # full rewrite, and the small/big ratio tracks bucket (not index) size
+    # bucket sizes grow 10× but a bucket is 1/8 of the table: far below a
+    # full rewrite, and the small/big ratio tracks bucket (not table) size
     assert big < small * 6
     # correctness after the pruned rewrite: doc count preserved, patch in
-    got = pipe.read()
+    got = pipe.table.read()
     assert got.count() == 2000
     assert got.where("conv_id = 'conv_000000' AND turn_idx = 0").first()["text"] == "patched"
 
 
 def test_search_sink_delete_empties_bucket(spark, tmp_path):
-    """All docs of a bucket deleted → the bucket points at no files and
-    reads as empty, while other buckets are untouched."""
-    cfg = SyncConfig(dst_path=str(tmp_path / "index"),
-                     checkpoint_path=str(tmp_path / "cp"), n_buckets=2)
-    pipe = SearchSyncPipeline(spark, cfg)
+    """All docs of a bucket deleted → the bucket reads as empty."""
+    pipe = _pipe(spark, tmp_path)
     snap = spark.createDataFrame(
         [("only", 0, "user", "t", pd.Timestamp(1_700_000_000, unit="s").to_pydatetime())],
         "conv_id string, turn_idx int, role string, text string, ts timestamp")
     pipe.initial_sync(snap)
     ev = spark.createDataFrame(
         [(10_000, "d", NS, json.dumps({"conv_id": "only", "turn_idx": 0}))],
-        "ts long, op string, ns string, doc string")
+        ENVELOPE)
     res = pipe.apply_batch(ev, 0)
     assert not res["skipped"]
-    assert pipe.read().count() == 0
+    assert pipe.table.read().count() == 0
 
 
 def test_search_sink_expires_unreferenced_bucket_versions(spark, tmp_path):
-    """Continuous streams must not grow index storage unboundedly: expired
-    versions drop bucket dirs no recent meta references, while buckets a
-    recent meta still points at (even in OLD version dirs) survive."""
+    """Continuous streams must not grow storage unboundedly: expired
+    versions drop files no recent manifest references, while files a recent
+    manifest still points at (even in OLD version dirs) survive."""
     import os
 
     cfg = SyncConfig(dst_path=str(tmp_path / "index"),
                      checkpoint_path=str(tmp_path / "cp"), n_buckets=4,
                      keep_versions=2, expire_every=2)
-    pipe = SearchSyncPipeline(spark, cfg)
+    pipe = CdcPipeline(spark, cfg)
     pipe.initial_sync(gen_transcripts_snapshot(spark, 12, 3))
     ev = gen_oplog_events(spark, 12, 3, 120)
     stats = [pipe.apply_batch(ev.where(f"ts % 4 = {i}"), i) for i in range(4)]
     assert any(s.get("expired_files", 0) > 0 for s in stats)
-    # current state fully readable: every live bucket pointer resolves
-    m = pipe.sink._meta()
-    for b, ver in m["buckets"].items():
-        if ver is not None:
-            assert os.path.isdir(pipe.sink._bucket_dir(ver, int(b))), (b, ver)
-    assert pipe.read().count() > 0
+    # current state fully readable: every live file pointer resolves
+    m = pipe.table.manifest()
+    live = [f for part in ("buckets", "deltas")
+            for files in m.get(part, {}).values() for f in files]
+    assert live and all(os.path.exists(f) for f in live)
+    assert pipe.table.read().count() > 0
 
 
 def test_search_sink_epoch_guard_and_run_stream(spark, tmp_path):
-    """Same guard as the lake: a second event segment under a FRESH spark
-    checkpoint (batch ids restart at 0) must apply, not be skipped as a
-    replay — and same-epoch re-delivery stays idempotent."""
+    """A second event segment under a FRESH spark checkpoint (batch ids
+    restart at 0) must apply, not be skipped as a replay — and same-epoch
+    re-delivery stays idempotent."""
     from py_mongo_sync_spark.sources.generate import write_events_jsonl
     from py_mongo_sync_spark.sources.oplog import read_oplog_stream
 
     cfg = SyncConfig(dst_path=str(tmp_path / "index"),
                      checkpoint_path=str(tmp_path / "cp"), n_buckets=4)
-    pipe = SearchSyncPipeline(spark, cfg)
+    pipe = CdcPipeline(spark, cfg)
     snap = gen_transcripts_snapshot(spark, 10, 3)
     pipe.initial_sync(snap)
 
@@ -183,25 +213,24 @@ def test_search_sink_epoch_guard_and_run_stream(spark, tmp_path):
     pipe.run_stream(read_oplog_stream(spark, str(tmp_path / "ev1"),
                                       max_files_per_trigger=1),
                     str(tmp_path / "scp1"))
-    n1 = pipe.read().count()
+    n1 = pipe.table.read().count()
 
     # same checkpoint re-run: everything replays as committed (idempotent)
     pipe.run_stream(read_oplog_stream(spark, str(tmp_path / "ev1"),
                                       max_files_per_trigger=1),
                     str(tmp_path / "scp1"))
-    assert pipe.read().count() == n1
+    assert pipe.table.read().count() == n1
 
     # fresh checkpoint + second segment: batch ids restart at 0 but MUST
     # apply under the new epoch
     ev2 = gen_oplog_events(spark, 10, 3, 120, start_optime=10 * 3 + 1000 + 200,
                            seed=5)
     write_events_jsonl(ev2, str(tmp_path / "ev2"), n_files=1)
-    pipe2 = SearchSyncPipeline(spark, cfg)
+    pipe2 = CdcPipeline(spark, cfg)
     pipe2.run_stream(read_oplog_stream(spark, str(tmp_path / "ev2"),
                                        max_files_per_trigger=1),
                      str(tmp_path / "scp2"))
-    import pandas as _pd
 
-    all_ev = _pd.concat([ev1.toPandas(), ev2.toPandas()])
+    all_ev = pd.concat([ev1.toPandas(), ev2.toPandas()])
     exp = oracle_replay(snap.toPandas(), all_ev)
-    assert pipe2.read().count() == len(exp)
+    assert pipe2.table.read().count() == len(exp)
